@@ -215,7 +215,7 @@ def q_scoped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicator.py:322-334): near-dup pairs may only form within one
     source. The source key comes from the engine's source_of(url) — the
     same expression the pair join scopes on — and the join is keyed on it,
-    exactly how _capped_self_join enforces the scope."""
+    exactly how band_join enforces the scope."""
     from py_image_dedup_spark.operators.modes import source_of
 
     cfg = DedupConfig(across_sources=False)

@@ -93,7 +93,7 @@ class DedupConfig:
     # SEARCH_ACROSS_ROOT_DIRS analog: when False, candidate pairs are
     # restricted to urls sharing a source (deduplicator.py:322-334 keeps
     # candidates under the same root dir). Enforced structurally in the
-    # pair join (operators/modes.py:_capped_self_join): the source joins
+    # pair join (operators/modes.py:band_join): the source joins
     # as an extra bucket key, so scoped runs also shrink every LSH bucket.
     across_sources: bool = True
     # What "source" means for a url: regex whose full match is the source

@@ -24,9 +24,8 @@ aggregation + one join (two shuffles) with localCheckpoint to cut lineage
 (SURVEY.md §4 item 3). Convergence detection is an O(1)-result XOR
 signature of the freshly checkpointed edge set — no join-with-previous.
 
-Scale guard: `max_iterations` bounds runaway rounds; non-convergence is
-reported via `stats`, and the partial edges still only over-split, never
-merge wrongly (the final min-aggregation keeps labels consistent).
+Scale guard: `max_iterations` bounds runaway rounds; reaching it without
+converging raises — a partial edge set would silently split clusters.
 """
 
 from __future__ import annotations
@@ -167,6 +166,7 @@ def connected_components(
     cluster_id = min vertex of the component. Vertices absent from any edge
     become singleton clusters (cluster_id = own vertex) if a vertices frame
     is supplied. `stats`, if given, receives {"rounds": n, "converged": b}.
+    Raises RuntimeError when `max_iterations` rounds end unconverged.
     `local_contract` (default on) runs the per-partition union-find
     pre-pass — a pure plan optimization, label-identical output (pytest
     asserts equivalence on random graphs).
@@ -218,15 +218,18 @@ def connected_components(
     if stats is not None:
         stats["rounds"] = rounds
         stats["converged"] = converged
-
+    if not converged:
+        raise RuntimeError(
+            f"connected components did not converge in {rounds} rounds "
+            f"(max_iterations={max_iterations}); clusters would be split"
+        )
     return _finish_components(e, vertices, vertex_col)
 
 
 def _finish_components(
     e: DataFrame, vertices: DataFrame | None, vertex_col: str
 ) -> DataFrame:
-    # converged edge set is a union of stars (u = component min, v = member);
-    # the min-agg also keeps labels consistent on a non-converged partial
+    # converged edge set is a union of stars (u = component min, v = member)
     out = (
         e.select(F.col("v").alias(vertex_col), F.col("u").alias("cluster_id"))
         .union(

@@ -8,20 +8,25 @@ signature is MinHash and the words are LSH bands.
 
 Dataflow (one distributed plan, no driver loop):
   signatures --explode bands--> (url, band_id, band_hash)
-    --hot-bucket cap (broadcast anti-join)--> capped bands
-    --self-equi-join on (band_id, band_hash), url_a < url_b-->
-    --groupBy pair (score = #shared bands)--> candidate pairs
-    --join back signatures x2, est Jaccard--> verified pairs (dist <= max_dist)
+    --band_join (operators/modes.py): bucket sizes joined onto the band
+      rows, capped + salted self-join on (band_id, band_hash) over uids-->
+    --groupBy pair (score = #shared bands)--> candidate (uid_a, uid_b)
+    --join back signatures x2, est Jaccard--> verified url pairs
+      (dist <= max_dist)
+
+The batch pipeline and the incremental stream run the same join and the
+same verification; the stream adds its band store as join-only rows so a
+pair needs at least one new doc.
 
 Scale notes (north_rule):
  * The band self-join shuffles on (band_id, band_hash) — the natural key;
    AQE skew-join splits residual hot partitions.
  * Zipfian boilerplate buckets are CAPPED: buckets with more members than
-   cfg.bucket_cap are excluded from pair generation and surfaced via
-   `hot_buckets` for metrics (exact-dup pre-pass has already removed
-   identical-text mass, so hot buckets are template noise whose O(n^2)
-   pairs would dominate cost). The hot list is tiny by construction =>
-   broadcast anti-join, no extra shuffle of the big side beyond the join.
+   cfg.bucket_cap produce no pairs, and buckets above cfg.salt_threshold
+   are salted over cfg.n_salts tasks; the tier counts land in the pairs
+   stage's metrics (exact-dup pre-pass has already removed identical-text
+   mass, so hot buckets are template noise whose O(n^2) pairs would
+   dominate cost).
  * Pair dedup across bands happens in the same aggregation that computes
    the shared-band score — one shuffle, map-side combined.
 """
@@ -83,50 +88,17 @@ def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def hot_buckets(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Buckets whose membership exceeds the cap — metrics + exclusion list."""
-    return (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("bucket_size"))
-        .where(F.col("bucket_size") > cfg.bucket_cap)
-    )
-
-
-def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
-                    hot: DataFrame | None = None) -> DataFrame:
-    """Band self-join -> (url_a, url_b, score) with score = #shared bands."""
-    if hot is None:
-        hot = hot_buckets(bands, cfg)
-    capped = bands.join(
-        F.broadcast(hot.select("band_id", "band_hash")),
-        ["band_id", "band_hash"],
-        "left_anti",
-    )
-    a = capped.alias("a")
-    b = capped.alias("b")
-    pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-    )
-    return pairs.groupBy("url_a", "url_b").agg(
-        F.count("*").cast("double").alias("score")
-    )
-
-
 def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                  cfg: DedupConfig, broadcast_pairs: bool = False,
-                 key: str = "url",
                  sig_cols: tuple = ("sig",)) -> DataFrame:
     """Exact re-check at the signature level: dist = 1 - estimated Jaccard
     (fraction of agreeing positions); keep dist <= max_dist. Mirrors the
     reference's distance_cutoff filter (elasticsearchstorebackend.py:55,86).
 
-    `key` names the pair-join key: "url" (streaming path) or "uid" — the
-    compact 8-byte xxhash64(url) the batch band join shuffles instead of
-    url strings (operators/modes.py:_capped_self_join). For key="uid" the
-    signature probe recovers url alongside sig, so the output is always
-    url pairs, canonicalized url_a < url_b.
+    Pairs are keyed by uid — the compact 8-byte xxhash64(url) the band
+    join shuffles instead of url strings (operators/modes.py:band_join);
+    the signature probe recovers url alongside sig, so the output is url
+    pairs, canonicalized url_a < url_b.
 
     Two physical shapes (caller picks by MEASURED pair count — pairs come
     out of a materialized checkpoint, so counting is cheap):
@@ -139,32 +111,23 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
       broadcast_pairs=False  plain two-step shuffle join — the safe shape
                              when the pair list itself is huge.
     """
-    ka, kb = f"{key}_a", f"{key}_b"
     cols = list(sig_cols)
-    if key == "url":
-        sigs = signatures.select("url", *cols)
-        sa = sigs.select(F.col("url").alias(ka),
-                         *[F.col(c).alias(f"{c}_a") for c in cols])
-        sb = sigs.select(F.col("url").alias(kb),
-                         *[F.col(c).alias(f"{c}_b") for c in cols])
-    else:
-        sigs = signatures.withColumn(key, F.xxhash64("url")).select(
-            key, "url", *cols
-        )
-        sa = sigs.select(
-            F.col(key).alias(ka), F.col("url").alias("url_a"),
-            *[F.col(c).alias(f"{c}_a") for c in cols],
-        )
-        sb = sigs.select(
-            F.col(key).alias(kb), F.col("url").alias("url_b"),
-            *[F.col(c).alias(f"{c}_b") for c in cols],
-        )
+    sigs = signatures.select(F.xxhash64("url").alias("uid"), "url", *cols)
+    sa = sigs.select(
+        F.col("uid").alias("uid_a"), F.col("url").alias("url_a"),
+        *[F.col(c).alias(f"{c}_a") for c in cols],
+    )
+    sb = sigs.select(
+        F.col("uid").alias("uid_b"), F.col("url").alias("url_b"),
+        *[F.col(c).alias(f"{c}_b") for c in cols],
+    )
     if broadcast_pairs:
-        ja = sa.join(F.broadcast(pairs.select(ka, kb, "score")), ka)
-        jb = sb.join(F.broadcast(pairs.select(ka, kb)), kb)
-        joined = ja.join(jb, [ka, kb])
+        ja = sa.join(F.broadcast(pairs.select("uid_a", "uid_b", "score")),
+                     "uid_a")
+        jb = sb.join(F.broadcast(pairs.select("uid_a", "uid_b")), "uid_b")
+        joined = ja.join(jb, ["uid_a", "uid_b"])
     else:
-        joined = pairs.join(sa, ka).join(sb, kb)
+        joined = pairs.join(sa, "uid_a").join(sb, "uid_b")
     # dist = MIN across normalization variants (the reference's best-
     # orientation semantic: a duplicate under ANY canonical form matches)
     dists = [

@@ -37,10 +37,20 @@ def source_of(url, cfg: DedupConfig):
     return F.regexp_extract(url, cfg.source_pattern, 0)
 
 
-def _capped_self_join(bands: DataFrame, cfg: DedupConfig,
-                      stats: dict | None = None) -> DataFrame:
-    """Shared band/bucket self-join with skew handling; returns
-    (uid_a, uid_b, score = #shared buckets), uid = xxhash64(url).
+def band_join(bands: DataFrame, cfg: DedupConfig,
+              store: DataFrame | None = None,
+              stats: dict | None = None) -> DataFrame:
+    """The engine's one band/bucket self-join, shared by batch and stream;
+    returns (uid_a, uid_b, score = #shared buckets) with uid_a < uid_b,
+    uid = xxhash64(url).
+
+    `bands` (url, band_id, band_hash) are the NEW docs' band rows. `store`,
+    same columns, holds band rows of docs whose pairs were emitted before
+    (the stream's band store, pruned to the buckets the new docs touch; it
+    must not hold any url of `bands`). Store rows count toward bucket sizes
+    but only ever join as the B side, so every pair has at least one new
+    side: O(new x bucket) work per bucket, not O(bucket^2). Batch passes no
+    store and gets the plain self-join.
 
     The join shuffles COMPACT 8-byte uids, not ~60-byte url strings — at
     32-48 band rows per doc that cuts band-table and pair-agg shuffle bytes
@@ -65,119 +75,107 @@ def _capped_self_join(bands: DataFrame, cfg: DedupConfig,
       size >  bucket_cap       excluded (boilerplate; reported via
                                hot-bucket metrics), AQE skew-join mops up
                                residual imbalance
+
+    Lazy: the caller owns materialisation (batch checkpoints the pair
+    table it probes three times; a micro-batch writes it once). `stats`,
+    if given, receives the hot-bucket report at the cost of one job over
+    the bucket-size table.
     """
     keys = ["band_id", "band_hash"]
-    bands = bands.withColumn("uid", F.xxhash64("url"))
+    rows = bands.select("url", *keys, F.lit(True).alias("new"))
+    if store is not None:
+        rows = rows.unionByName(
+            store.select("url", *keys, F.lit(False).alias("new"))
+        )
+    src = []
     if not cfg.across_sources:
-        bands = bands.withColumn("_src", source_of(F.col("url"), cfg))
-        keys = keys + ["_src"]
-    bands = bands.select("uid", *keys)
-    # bucket_size rides on each band row via a map-side-combined groupBy
-    # (shuffles only (keys, partial count) rows — tiny) joined back onto
-    # the band table; the SMJ hint pins the join to a sort-merge whose
-    # output is HashPartitioning(keys) — exactly the exchange the
-    # self-join needs, so the band table still moves ONCE and the cached
-    # partitioning + sort order feed both join sides exchange-free.
-    # (A window count over partitionBy(keys) had the same 1-shuffle shape
-    # but buffers a whole bucket per window task — the hot boilerplate
-    # bucket the cap exists for became a single straggler/spill task that
-    # AQE cannot split; the SMJ streams it row-by-row instead. ADVICE r3.)
-    sizes = bands.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("bucket_size")
+        src = [source_of(F.col("url"), cfg).alias("_src")]
+    # The band table moves ONCE: hash-partitioned by bucket, it feeds the
+    # bucket-size groupBy, the size join-back (both exchange-free) and the
+    # plain self-join. uid is nullable on purpose (null url -> null uid,
+    # never a pair), so count(uid) cannot fold to count(*): the size
+    # aggregate then reads every column the join does and column pruning
+    # cannot split the two onto separate exchanges (for the stream that
+    # would scan the band store twice). Buckets without a new doc make no
+    # pairs and drop here. The SMJ hint keeps the join-back a sort-merge
+    # that streams a bucket row-by-row. (A window count over
+    # partitionBy(keys) buffers a whole bucket per window task — the hot
+    # boilerplate bucket the cap exists for became a single straggler/
+    # spill task that AQE cannot split. ADVICE r3.)
+    rows = rows.select(
+        F.expr("if(url IS NULL, NULL, xxhash64(url))").alias("uid"),
+        "new", *keys, *src,
     )
-    sized = bands.join(sizes.hint("shuffle_merge"), keys).persist()
-    try:
-        if stats is not None:
-            # the A5 hot-bucket report: how many buckets each skew tier
-            # caught, and how many band rows the cap excluded. ONE action:
-            # hot ∪ warm rows (size > least(salt, cap) covers both tiers,
-            # also when salt_threshold > bucket_cap and warm is empty) are
-            # tiny by construction — boilerplate template pages at web
-            # scale land here; nonzero hot counts are the signal the cap
-            # is earning its keep, not an error. One cache scan + one
-            # tier-subset-sized shuffle replaces the previous three
-            # full-cache-scan actions (count + two distincts).
-            cap, salt = cfg.bucket_cap, cfg.salt_threshold
-            tier_row = (
-                sized.where(F.col("bucket_size") > min(salt, cap))
-                .groupBy(*keys)
-                .agg(F.first("bucket_size").alias("bs"))
-                .agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("bs") > cap, F.col("bs"))),
-                        F.lit(0),
-                    ).alias("hot_rows"),
-                    F.count(F.when(F.col("bs") > cap, 1)).alias("hot"),
-                    F.count(
-                        F.when((F.col("bs") > salt) & (F.col("bs") <= cap), 1)
-                    ).alias("warm"),
-                )
-                .first()
+    if src:
+        keys = keys + ["_src"]
+    rows = rows.repartition(*keys)
+    sizes = rows.groupBy(*keys).agg(
+        F.expr("count(uid)").alias("bucket_size"),
+        F.expr("max(new)").alias("has_new"),
+    )
+    cap, salt = cfg.bucket_cap, cfg.salt_threshold
+    if stats is not None:
+        # the A5 hot-bucket report: how many buckets each skew tier caught,
+        # and how many band rows the cap excluded — ONE action over the
+        # buckets above least(salt, cap) (covers both tiers, also when
+        # salt_threshold > bucket_cap and warm is empty). Nonzero hot
+        # counts are the signal the cap is earning its keep, not an error.
+        tier_row = (
+            sizes.where(f"bucket_size > {min(salt, cap)}")
+            .selectExpr(
+                f"coalesce(sum(if(bucket_size > {cap}, bucket_size, 0)), 0)"
+                " AS hot_rows",
+                f"count_if(bucket_size > {cap}) AS hot",
+                f"count_if(bucket_size > {salt} AND bucket_size <= {cap})"
+                " AS warm",
             )
-            stats["hot_bucket_rows"] = int(tier_row["hot_rows"])
-            stats["hot_buckets"] = int(tier_row["hot"])
-            stats["warm_buckets"] = int(tier_row["warm"])
-        # cool = neither hot nor warm (when salt_threshold > bucket_cap the
-        # warm tier is empty and the cap alone gates)
-        cool = sized.where(
-            (F.col("bucket_size") <= cfg.salt_threshold)
-            & (F.col("bucket_size") <= cfg.bucket_cap)
+            .first()
         )
-        warm_rows = sized.where(
-            (F.col("bucket_size") > cfg.salt_threshold)
-            & (F.col("bucket_size") <= cfg.bucket_cap)
+        stats["hot_bucket_rows"] = int(tier_row["hot_rows"])
+        stats["hot_buckets"] = int(tier_row["hot"])
+        stats["warm_buckets"] = int(tier_row["warm"])
+    sized = rows.join(
+        sizes.where("has_new").drop("has_new").hint("shuffle_merge"), keys
+    )
+    # cool = neither hot nor warm (when salt_threshold > bucket_cap the
+    # warm tier is empty and the cap alone gates)
+    cool = sized.where(f"bucket_size <= {min(salt, cap)}")
+    warm = sized.where(f"bucket_size > {salt} AND bucket_size <= {cap}")
+
+    def pairs(a: DataFrame, b: DataFrame, on: list[str]) -> DataFrame:
+        # A side new only; new-vs-new pairs once (a.uid < b.uid), new-vs-
+        # store pairs once (the store side is never an A row). The B side
+        # alone picks the tier: an A row of another tier finds no partner.
+        return (
+            a.where("new").alias("a")
+            .join(b.alias("b"), on)
+            .where("a.uid < b.uid OR NOT b.new")
+            .selectExpr("least(a.uid, b.uid) AS uid_a",
+                        "greatest(a.uid, b.uid) AS uid_b")
         )
 
-        # the self-joins MUST NOT broadcast: both sides are the full corpus
-        # band table, but Catalyst's post-filter row estimates can fall
-        # under the broadcast threshold and plan a driver-killing
-        # BroadcastHashJoin of the whole corpus (measured: ~500 MB single-
-        # threaded hash-map build at 300k docs). shuffle_merge (not
-        # shuffle_hash) because sort-merge spills: a shuffled-hash build
-        # side must fit in execution memory per task, and at 1.5M docs /
-        # 4 partitions it OOMs (measured) — exactly the failure a 100x run
-        # would hit on any skewed shuffle split. With both sides already
-        # hash-partitioned by the cache, the SMJ plans with zero exchanges.
-        a, b = cool.alias("a"), cool.hint("shuffle_merge").alias("b")
-        cool_pairs = (
-            a.join(b, keys)
-            .where(F.col("a.uid") < F.col("b.uid"))
-            .select(F.col("a.uid").alias("uid_a"), F.col("b.uid").alias("uid_b"))
-        )
-
-        n_salts = max(1, cfg.n_salts)
-        wa = warm_rows.withColumn(
-            "salt", F.pmod(F.col("uid"), F.lit(n_salts).cast("long"))
-        ).alias("a")
-        wb = (
-            warm_rows.withColumn(
-                "salt",
-                F.explode(
-                    F.sequence(
-                        F.lit(0).cast("long"), F.lit(n_salts - 1).cast("long")
-                    )
-                ),
-            )
-            .hint("shuffle_merge")
-            .alias("b")
-        )
-        warm_pairs = (
-            wa.join(wb, keys + ["salt"])
-            .where(F.col("a.uid") < F.col("b.uid"))
-            .select(F.col("a.uid").alias("uid_a"), F.col("b.uid").alias("uid_b"))
-        )
-
-        scored = (
-            cool_pairs.unionByName(warm_pairs)
-            .groupBy("uid_a", "uid_b")
-            .agg(F.count("*").cast("double").alias("score"))
-        )
-        # materialize the (post-aggregation, much smaller) pair table so the
-        # band cache can be released here instead of leaking for the app
-        # lifetime across repeated pairs_stage calls
-        return scored.localCheckpoint(eager=True)
-    finally:
-        sized.unpersist()
+    # the self-joins MUST NOT broadcast: in batch both sides are the full
+    # corpus band table, but Catalyst's post-filter row estimates can fall
+    # under the broadcast threshold and plan a driver-killing
+    # BroadcastHashJoin of the whole corpus (measured: ~500 MB single-
+    # threaded hash-map build at 300k docs). shuffle_merge (not
+    # shuffle_hash) because sort-merge spills: a shuffled-hash build side
+    # must fit in execution memory per task, and at 1.5M docs / 4
+    # partitions it OOMs (measured) — exactly the failure a 100x run would
+    # hit on any skewed shuffle split. Both cool sides are
+    # HashPartitioning(keys) already, so that SMJ plans with zero exchanges.
+    cool_pairs = pairs(rows, cool.hint("shuffle_merge"), keys)
+    n_salts = max(1, cfg.n_salts)
+    wa = warm.withColumn("salt", F.expr(f"pmod(uid, {n_salts})"))
+    wb = warm.withColumn(
+        "salt", F.expr(f"explode(sequence(0L, {n_salts - 1}L))")
+    ).hint("shuffle_merge")
+    warm_pairs = pairs(wa, wb, keys + ["salt"])
+    return (
+        cool_pairs.unionByName(warm_pairs)
+        .groupBy("uid_a", "uid_b")
+        .agg(F.count("*").cast("double").alias("score"))
+    )
 
 
 # ---------------------------------------------------------------- minhash
@@ -206,7 +204,8 @@ def minhash_signatures(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
 def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
                   stats: dict | None = None) -> DataFrame:
     bands = _minhash.explode_bands(signatures, cfg)
-    pairs = _capped_self_join(bands, cfg, stats)
+    # materialized once: the size probe and both verify branches read it
+    pairs = band_join(bands, cfg, stats=stats).localCheckpoint(eager=True)
     # variant sig columns actually present (a store written without
     # variants verifies on "sig" alone even if cfg now asks for variants)
     sig_cols = ("sig",) + _minhash.variant_sig_cols(
@@ -221,9 +220,9 @@ def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
     # instead. Output is provably identical to verifying them (dist 0.0
     # either way).
     b = F.lit(float(cfg.lsh_bands * len(sig_cols)))
-    # pairs just materialized (checkpoint) — ONE cheap agg job sizes both
-    # subsets, and each picks the shape that never shuffles the signature
-    # table when its pair list is broadcastable
+    # ONE cheap agg job over the checkpointed pairs sizes both subsets, and
+    # each picks the shape that never shuffles the signature table when its
+    # pair list is broadcastable
     sizes = pairs.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("score") >= b, 1)).alias("n_full"),
@@ -235,7 +234,7 @@ def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
     verified = _minhash.verify_pairs(
         pairs.where(F.col("score") < b), signatures, cfg,
         broadcast_pairs=n_rest <= cfg.broadcast_pairs_limit,
-        key="uid", sig_cols=sig_cols,
+        sig_cols=sig_cols,
     )
     if n_full == 0:
         return verified
@@ -261,7 +260,7 @@ def simhash_pairs(signatures: DataFrame, cfg: DedupConfig,
         "url",
         F.explode(simhash_blocks(F.col("simhash"), n_blocks)).alias("b"),
     ).select("url", "b.band_id", "b.band_hash")
-    pairs = _capped_self_join(bands, cfg, stats)
+    pairs = band_join(bands, cfg, stats=stats)
     sh = signatures.withColumn("uid", F.xxhash64("url")).select(
         "uid", "url", "simhash"
     )
@@ -312,7 +311,7 @@ def substring_pairs(signatures: DataFrame, cfg: DedupConfig,
     bands = signatures.select(
         "url", F.posexplode("sub_keys").alias("band_id", "band_hash")
     ).withColumn("band_id", F.lit(0))  # key identity is the bucket
-    pairs = _capped_self_join(bands, cfg, stats)
+    pairs = band_join(bands, cfg, stats=stats)
     sizes = signatures.withColumn("uid", F.xxhash64("url")).select(
         "uid", "url", F.size("sub_keys").alias("nk")
     )

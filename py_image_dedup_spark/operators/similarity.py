@@ -440,7 +440,7 @@ def semantic_dedup(
     exact thing SemDeDup targets — lands whole in one cell, and an
     unguarded within-cell self-join is O(|cell|^2) in a shape neither the
     cap tiers nor AQE can split. Cells route through the text path's
-    three-tier logic (operators/modes._capped_self_join), adapted to the
+    three-tier logic (operators/modes.band_join), adapted to the
     fact that similarity edges need no aggregation:
 
       size <= salt_threshold  plain within-cell self-join (exact)

@@ -181,8 +181,6 @@ def _fanout_small_input(spark: SparkSession, pages: DataFrame) -> DataFrame:
     Row groups are counted driver-side from the parquet footers (cheap,
     metadata-only); non-file or non-local inputs skip the guard.
     """
-    if os.environ.get("PIPELINE_FANOUT", "1") == "0":  # opt-out knob
-        return pages
     par = spark.sparkContext.defaultParallelism
     try:
         files = [
@@ -414,7 +412,7 @@ def run_dedup_pipeline(
         # Compact-uid CC: every large-star/small-star round shuffles 8-byte
         # xxhash64(url) ints, not ~60-byte url strings — the same compaction
         # the band self-join already uses (operators/modes.py
-        # _capped_self_join), with the same birthday-bounded collision odds
+        # band_join), with the same birthday-bounded collision odds
         # (~n^2/2^65; a collision would merge two clusters — at 10^11+ docs
         # assign a surrogate int64 key at ingest instead). cluster_id is the
         # component-min uid (long); urls rejoin only at the final fan-out.
@@ -439,13 +437,11 @@ def run_dedup_pipeline(
             known_edge_count=n_pairs,
             single_task_edges=cfg.cc_single_task_edges,
         )
-        metrics.append(
-            {
-                "stage": "clusters",
-                "metric": "cc_rounds",
-                "value": float(cc_stats.get("rounds", 0)),
-            }
-        )
+        for k in ("rounds", "converged"):
+            metrics.append(
+                {"stage": "clusters", "metric": f"cc_{k}",
+                 "value": float(cc_stats[k])}
+            )
         # Per-representative min distance / max score, aggregated at REP
         # level (uid-keyed, rep-count-sized shuffles) before the corpus
         # fan-out — the actions stage then needs zero joins, only its

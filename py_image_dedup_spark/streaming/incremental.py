@@ -6,7 +6,7 @@ queue (30 s settle) -> per-item re-analysis + re-dedup
 
   readStream (new page files / Iceberg appends)
     -> dropDuplicates on url within batch   (T6, OrderedDict dedupe)
-    -> foreachBatch incremental_batch        (T7, re-analyze + re-dedup)
+    -> foreachBatch incremental_pairs        (T7, re-analyze + re-dedup)
   trigger(processingTime=...)                (T5, RegularIntervalWorker)
 
 The debounce/settle window (T4, processing_manager.py:76-80) maps to the
@@ -14,10 +14,10 @@ processing-time trigger interval; exact event-time parity would use
 session_window(ts, '30 seconds') which is provided by session_windows()
 for event tables.
 
-incremental_batch is deliberately *restricted re-dedup*: new signatures are
-merged into the store, then the LSH join runs only for bands touched by
-the new docs — the micro-batch analog of the reference re-running
-find_duplicates for just the drained queue items
+incremental_pairs is deliberately *restricted re-dedup*: new signatures are
+merged into the store, then the batch pipeline's band join runs only for
+buckets touched by the new docs — the micro-batch analog of the reference
+re-running find_duplicates for just the drained queue items
 (processing_manager.py:100-136).
 """
 
@@ -34,15 +34,11 @@ from py_image_dedup_spark.operators.exact import (
     with_content_hash,
 )
 from py_image_dedup_spark.operators.incremental import merge_signatures
-from py_image_dedup_spark.operators.lsh import (
-    explode_bands,
-    variant_sig_cols,
-    verify_pairs,
-)
-from py_image_dedup_spark.operators.modes import minhash_signatures
+from py_image_dedup_spark.operators.lsh import explode_bands, verify_pairs
+from py_image_dedup_spark.operators.modes import band_join, minhash_signatures
 
 
-def _require_variant_cols(store_columns, cfg: DedupConfig) -> tuple:
+def _require_variant_cols(store_columns, cfg: DedupConfig) -> None:
     """cfg.norm_variants against an existing store's schema: the store must
     already carry every requested sig_v_<variant> column, or the stream
     would silently dedup WITHOUT the variants batch mode catches (ADVICE
@@ -57,56 +53,53 @@ def _require_variant_cols(store_columns, cfg: DedupConfig) -> tuple:
             f"{cfg.norm_variants}; rebuild the store with variants enabled "
             "or run without norm_variants"
         )
-    return want
 
 
-def incremental_pairs(
-    new_pages: DataFrame,
-    signature_store: DataFrame,
-    cfg: DedupConfig,
-) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch step: returns (updated_store, new_verified_pairs).
-
-    Only buckets containing >=1 NEW document generate pairs — existing-vs-
-    existing pairs were already emitted by earlier batches. This is the
-    band-restricted re-query of processing_manager.py:100-136, expressed as
-    a semi-join of the store's bands against the new docs' band keys.
-    """
-    hashed = with_content_hash(new_pages)
-    reps = exact_unique_representatives(hashed)
-    vcols = _require_variant_cols(signature_store.columns, cfg)
-    new_sigs = minhash_signatures(reps, cfg).select(
+def new_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """A micro-batch's signature rows (url, content_hash, sig[, sig_v_*]):
+    one exact-dup representative per content hash, signed the way batch
+    signs (cfg.norm_variants included)."""
+    reps = exact_unique_representatives(with_content_hash(pages))
+    vcols = tuple(f"sig_v_{n}" for n in cfg.norm_variants)
+    return minhash_signatures(reps, cfg).select(
         "url", "content_hash", "sig", *vcols
     )
 
-    store = merge_signatures(signature_store, new_sigs)
 
+def incremental_pairs(
+    new_sigs: DataFrame,
+    store_sigs: DataFrame | None,
+    store_bands: DataFrame | None,
+    cfg: DedupConfig,
+) -> DataFrame:
+    """The one micro-batch step: verified pairs (url_a, url_b, dist, score)
+    with at least one side in `new_sigs` — existing-vs-existing pairs were
+    already emitted by earlier batches. This is the band-restricted
+    re-query of processing_manager.py:100-136.
+
+    `store_sigs` is the store's current signature view before this batch
+    and `store_bands` its band rows (url, band_id, band_hash), possibly
+    already pruned; both None for an empty store. Store bands are cut to
+    the buckets the new docs touch and drop re-upserted urls, then join as
+    the store side of the batch pipeline's band join (operators/modes.py:
+    band_join), so the stream gets the same bucket cap and salting as
+    batch. Verification is batch's uid-keyed verify_pairs against the
+    store view with this batch's signatures upserted.
+    """
+    sig_cols = ("sig", *(f"sig_v_{n}" for n in cfg.norm_variants))
     new_bands = explode_bands(new_sigs, cfg)
-    touched = new_bands.select("band_id", "band_hash").distinct()
-    store_bands = explode_bands(store, cfg).join(
-        F.broadcast(touched), ["band_id", "band_hash"], "left_semi"
-    )
-    a, b = store_bands.alias("a"), store_bands.alias("b")
-    new_urls = new_sigs.select("url")
-    mark_a = F.broadcast(
-        new_urls.select(F.col("url").alias("url_a"), F.lit(1).alias("_na"))
-    )
-    mark_b = F.broadcast(
-        new_urls.select(F.col("url").alias("url_b"), F.lit(1).alias("_nb"))
-    )
-    pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-        .join(mark_a, "url_a", "left")
-        .join(mark_b, "url_b", "left")
-        # at least one side must be new; old-vs-old already emitted earlier
-        .where(F.col("_na").isNotNull() | F.col("_nb").isNotNull())
-        .groupBy("url_a", "url_b")
-        .agg(F.count("*").cast("double").alias("score"))
-    )
-    verified = verify_pairs(pairs, store, cfg, sig_cols=("sig", *vcols))
-    return store, verified
+    sigs = new_sigs.select("url", *sig_cols)
+    store = None
+    if store_sigs is not None:
+        # fail BEFORE the caller appends a mixed-schema file to the log
+        _require_variant_cols(store_sigs.columns, cfg)
+        sigs = merge_signatures(store_sigs.select("url", *sig_cols), sigs)
+        keys = ["band_id", "band_hash"]
+        store = store_bands.join(
+            F.broadcast(new_bands.select(*keys)), keys, "left_semi"
+        ).join(F.broadcast(new_sigs.select("url")), "url", "left_anti")
+    pairs = band_join(new_bands, cfg, store=store)
+    return verify_pairs(pairs, sigs, cfg, sig_cols=sig_cols)
 
 
 def filter_events(
@@ -383,6 +376,16 @@ def run_incremental_stream(
     """Wire incremental dedup to a file-source stream (new parquet files
     under input_path = the watchdog watch dir). Returns the StreamingQuery.
 
+    Each micro-batch keeps the latest row per url, signs one exact-dup
+    representative per content hash (new_signatures), then runs the one
+    micro-batch step, incremental_pairs: the new docs' band rows plus the
+    pruned store band rows go through the batch pipeline's capped, salted
+    band join (operators/modes.py:band_join) and batch's uid-keyed
+    verify_pairs. For the same input the stream therefore emits the batch
+    pipeline's pairs, hot-bucket cap included, as long as a bucket that
+    ends over bucket_cap is already over it when its first pair would
+    form: a pair emitted while its bucket was under the cap stays emitted.
+
     Storage layout — all APPEND-only, so no micro-batch ever deletes files
     another plan still references, and per-batch write cost is O(batch):
 
@@ -395,6 +398,9 @@ def run_incremental_stream(
                          with the new docs" lookup reads ONLY the
                          partitions holding touched buckets (partition
                          pruning at scan time), not the whole store
+      store_path/scan_metrics
+                         one row per micro-batch: touched vs total band
+                         partitions, and whether a store was scanned
       pairs_path         verified pairs, appended per batch
 
     Each pair is emitted exactly once across batches (a pair needs >=1 new
@@ -422,80 +428,45 @@ def run_incremental_stream(
             .agg(F.max_by(F.struct(*cols), F.col("warc_ts")).alias("_r"))
             .select("url", *[F.col(f"_r.{c}").alias(c) for c in cols])
         )
-        hashed = with_content_hash(batch)
-        reps = exact_unique_representatives(hashed)
-        vcols = tuple(f"sig_v_{n}" for n in cfg.norm_variants)
         new_sigs = (
-            minhash_signatures(reps, cfg)
-            .select("url", "content_hash", "sig", *vcols)
+            new_signatures(batch, cfg)
             .withColumn("batch_id", F.lit(batch_id))
-            .localCheckpoint(eager=True)  # hash once, 4 consumers below
+            .localCheckpoint(eager=True)  # hash once, every consumer below
         )
-        if new_sigs.isEmpty():
-            return
         new_bands = explode_bands(new_sigs, cfg).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        touched = new_bands.select("band_id", "band_hash").distinct()
         touched_pfx = [
             r[0]
-            for r in touched.select(
+            for r in new_bands.select(
                 F.pmod("band_hash", F.lit(n_band_partitions)).alias("p")
             )
             .distinct()
             .collect()
         ]
+        if not touched_pfx:  # empty micro-batch
+            return
 
-        band_cols = ["url", "band_id", "band_hash"]
-        all_bands = new_bands.select(*band_cols)
-        store_sigs = None
+        store_sigs = store_bands = None
         if os.path.exists(os.path.join(sig_path, "_SUCCESS")):
-            sig_log = spark.read.parquet(sig_path)
-            # fail BEFORE this batch appends a mixed-schema file to the log
-            _require_variant_cols(sig_log.columns, cfg)
-            store_sigs = latest_signatures(sig_log)
+            # computed once for both readers below (the superseded-row
+            # filter and verification), and a plan leaf for the band join
+            store_sigs = latest_signatures(
+                spark.read.parquet(sig_path)
+            ).localCheckpoint(eager=False)
             # partition-pruned scan: only band_pfx partitions that contain a
-            # touched bucket are read, then exact bucket keys semi-join
-            old_bands = (
+            # touched bucket are read; rows superseded by a later re-upsert
+            # of the same url are dropped
+            store_bands = (
                 spark.read.parquet(bands_path)
                 .where(F.col("band_pfx").isin(touched_pfx))
-                .join(F.broadcast(touched), ["band_id", "band_hash"], "left_semi")
-                # drop rows superseded by a later re-upsert of the same url
                 .join(
                     store_sigs.select("url", "batch_id"),
                     ["url", "batch_id"],
                     "left_semi",
                 )
             )
-            all_bands = all_bands.unionByName(old_bands.select(*band_cols))
-
-        new_urls = new_sigs.select("url")
-        mark_a = F.broadcast(
-            new_urls.select(F.col("url").alias("url_a"), F.lit(1).alias("_na"))
-        )
-        mark_b = F.broadcast(
-            new_urls.select(F.col("url").alias("url_b"), F.lit(1).alias("_nb"))
-        )
-        a, b = all_bands.alias("a"), all_bands.alias("b")
-        pairs = (
-            a.join(b, ["band_id", "band_hash"])
-            .where(F.col("a.url") < F.col("b.url"))
-            .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-            .join(mark_a, "url_a", "left")
-            .join(mark_b, "url_b", "left")
-            # >=1 side new; old-vs-old pairs were emitted by earlier batches
-            .where(F.col("_na").isNotNull() | F.col("_nb").isNotNull())
-            .groupBy("url_a", "url_b")
-            .agg(F.count("*").cast("double").alias("score"))
-        )
-        sigs_view = new_sigs.select("url", "content_hash", "sig", *vcols)
-        if store_sigs is not None:
-            sigs_view = merge_signatures(
-                store_sigs.select("url", "content_hash", "sig", *vcols),
-                sigs_view,
-            )
-        verified = verify_pairs(pairs, sigs_view, cfg,
-                                sig_cols=("sig", *vcols))
+        verified = incremental_pairs(new_sigs, store_sigs, store_bands, cfg)
 
         # appends only — nothing a concurrent or later plan reads is deleted
         verified.write.mode("append").parquet(pairs_path)
@@ -508,11 +479,13 @@ def run_incremental_stream(
         # the store scan degenerated to a full read — resize
         # n_band_partitions). Cheap by construction: touched_pfx is already
         # collected for the pruned scan; total is the layout constant.
-        spark.createDataFrame(
-            [(batch_id, len(touched_pfx), n_band_partitions,
-              store_sigs is not None)],
-            "batch_id long, touched_band_partitions int, "
-            "total_band_partitions int, store_scanned boolean",
+        # (one JVM-side row: a Python-side createDataFrame would start
+        # Python workers for a single row)
+        spark.range(1, numPartitions=1).select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.lit(len(touched_pfx)).alias("touched_band_partitions"),
+            F.lit(n_band_partitions).alias("total_band_partitions"),
+            F.lit(store_sigs is not None).alias("store_scanned"),
         ).write.mode("append").parquet(os.path.join(store_path, "scan_metrics"))
         (
             new_bands.withColumn(

@@ -8,17 +8,20 @@ import datetime
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
-from py_image_dedup_spark.operators.exact import with_content_hash
 from py_image_dedup_spark.operators.incremental import (
     DATAMODEL_VERSION,
     fresh_pages,
     merge_signatures,
     orphan_signatures,
 )
-from py_image_dedup_spark.operators.lsh import lsh_candidate_pipeline
+from py_image_dedup_spark.operators.lsh import (
+    explode_bands,
+    lsh_candidate_pipeline,
+)
 from py_image_dedup_spark.sources.pages import generate_pages
 from py_image_dedup_spark.streaming.incremental import (
     incremental_pairs,
+    new_signatures,
     session_windows,
 )
 
@@ -81,17 +84,11 @@ def test_incremental_batch_matches_full_rerun(spark):
     first = all_pages.where(F.col("group_id") < 8)
     second = all_pages.where(F.col("group_id") >= 8)
 
-    # bootstrap store from first batch via the batch pipeline pieces
-    from py_image_dedup_spark.operators.exact import (
-        exact_unique_representatives,
+    store0 = new_signatures(first, cfg)
+    new_sigs = new_signatures(second, cfg)
+    new_pairs = incremental_pairs(
+        new_sigs, store0, explode_bands(store0, cfg), cfg
     )
-    from py_image_dedup_spark.operators.lsh import compute_signatures
-
-    store0 = compute_signatures(
-        exact_unique_representatives(with_content_hash(first)), cfg
-    ).select("url", "content_hash", "sig")
-
-    store1, new_pairs = incremental_pairs(second, store0, cfg)
     got = {
         (r["url_a"], r["url_b"]) for r in new_pairs.collect()
     }
@@ -110,18 +107,14 @@ def test_incremental_batch_matches_full_rerun(spark):
     }
     # incremental works on exact-dedup representatives; map both to rep space
     # by checking set equality on pairs whose BOTH members are reps
-    store_urls = {r["url"] for r in store1.select("url").collect()}
+    store_urls = {
+        r["url"] for r in merge_signatures(store0, new_sigs).select("url")
+        .collect()
+    }
     expected_rep = {
         (a, b) for a, b in expected if a in store_urls and b in store_urls
     }
     assert got == expected_rep
-    # store now holds signatures for both batches' representatives
-    assert store_urls >= {
-        r["url"]
-        for r in exact_unique_representatives(with_content_hash(second))
-        .select("url")
-        .collect()
-    }
 
 
 def test_session_windows_batch(spark):

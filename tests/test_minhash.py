@@ -17,11 +17,11 @@ from py_image_dedup_spark.functions.minhash import (
 )
 from py_image_dedup_spark.functions.shingles import char_shingles, shingle_set_jaccard
 from py_image_dedup_spark.operators.lsh import (
-    candidate_pairs,
     compute_signatures,
     explode_bands,
     lsh_candidate_pipeline,
 )
+from py_image_dedup_spark.operators.modes import band_join
 from py_image_dedup_spark.sources.pages import generate_pages
 
 CFG = DedupConfig(max_dist=0.30)
@@ -211,5 +211,5 @@ def test_hot_bucket_cap_excludes_mega_buckets(spark):
     df = spark.createDataFrame(rows, "url string, norm_text string")
     sigs = compute_signatures(df, cfg)
     bands = explode_bands(sigs, cfg)
-    pairs = candidate_pairs(bands, cfg)
+    pairs = band_join(bands, cfg)
     assert pairs.count() == 0

@@ -117,10 +117,7 @@ def test_minhash_full_band_short_circuit_equivalence(spark, pages):
     a semantics change)."""
     from py_image_dedup_spark.operators import lsh as L
     from py_image_dedup_spark.operators.exact import with_content_hash
-    from py_image_dedup_spark.operators.modes import (
-        _capped_self_join,
-        minhash_pairs,
-    )
+    from py_image_dedup_spark.operators.modes import band_join, minhash_pairs
 
     cfg = DedupConfig()
     # raw pages WITHOUT the exact pre-pass, so byte-identical variants
@@ -136,10 +133,10 @@ def test_minhash_full_band_short_circuit_equivalence(spark, pages):
 
     # the long way: verify EVERY pair through the signature probes
     bands = L.explode_bands(sigs, cfg)
-    all_pairs = _capped_self_join(bands, cfg)
+    all_pairs = band_join(bands, cfg)
     want = sorted(
         (r["url_a"], r["url_b"], r["dist"], r["score"])
-        for r in L.verify_pairs(all_pairs, sigs, cfg, key="uid").collect()
+        for r in L.verify_pairs(all_pairs, sigs, cfg).collect()
     )
     assert got == want
     # and the short-circuited pairs really read dist exactly 0.0

@@ -93,11 +93,11 @@ def test_streaming_incremental_honors_variants(spark):
     """The streaming micro-batch step must catch the same punct-mangled
     near-dup batch mode catches when norm_variants is on (ADVICE r5: it
     previously computed canonical-only signatures and silently missed)."""
-    from py_image_dedup_spark.operators.exact import (
-        exact_unique_representatives,
-        with_content_hash,
+    from py_image_dedup_spark.operators.lsh import explode_bands
+    from py_image_dedup_spark.streaming.incremental import (
+        incremental_pairs,
+        new_signatures,
     )
-    from py_image_dedup_spark.streaming.incremental import incremental_pairs
 
     docs = dict(_docs())
     first = spark.createDataFrame(
@@ -107,11 +107,12 @@ def test_streaming_incremental_honors_variants(spark):
     second = spark.createDataFrame(
         [("mangled", docs["mangled"])], "url string, text string"
     )
-    store0 = minhash_signatures(
-        exact_unique_representatives(with_content_hash(first)), CFG_ON
-    ).select("url", "content_hash", "sig", "sig_v_strip_punct")
+    store0 = new_signatures(first, CFG_ON)
 
-    _, new_pairs = incremental_pairs(second, store0, CFG_ON)
+    new_pairs = incremental_pairs(
+        new_signatures(second, CFG_ON), store0,
+        explode_bands(store0, CFG_ON), CFG_ON,
+    )
     got = {(r["url_a"], r["url_b"]): r["dist"] for r in new_pairs.collect()}
     assert ("clean", "mangled") in got
     assert got[("clean", "mangled")] == 0.0
@@ -122,12 +123,11 @@ def test_streaming_store_without_variants_raises(spark):
     """A canonical-only signature store with norm_variants requested must
     fail loudly, not silently dedup without the variants (and not append a
     mixed-schema file to the store log)."""
-    from py_image_dedup_spark.operators.exact import (
-        exact_unique_representatives,
-        with_content_hash,
+    from py_image_dedup_spark.operators.lsh import explode_bands
+    from py_image_dedup_spark.streaming.incremental import (
+        incremental_pairs,
+        new_signatures,
     )
-    from py_image_dedup_spark.operators.lsh import compute_signatures
-    from py_image_dedup_spark.streaming.incremental import incremental_pairs
 
     docs = dict(_docs())
     first = spark.createDataFrame(
@@ -136,11 +136,12 @@ def test_streaming_store_without_variants_raises(spark):
     second = spark.createDataFrame(
         [("mangled", docs["mangled"])], "url string, text string"
     )
-    store0 = compute_signatures(
-        exact_unique_representatives(with_content_hash(first)), CFG_ON
-    ).select("url", "content_hash", "sig")
+    store0 = new_signatures(first, CFG_OFF)
     try:
-        incremental_pairs(second, store0, CFG_ON)
+        incremental_pairs(
+            new_signatures(second, CFG_ON), store0,
+            explode_bands(store0, CFG_OFF), CFG_ON,
+        )
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "sig_v_strip_punct" in str(e)

@@ -203,8 +203,11 @@ def test_dup_pair_recall_on_golden_corpus(spark, pages, ckpt):
 
 def test_metrics_emitted(spark, pages, ckpt):
     out = run(spark, pages, ckpt)
-    stages = {r["stage"] for r in out["metrics"].collect()}
+    rows = out["metrics"].collect()
+    stages = {r["stage"] for r in rows}
     assert {"pages_meta", "signatures", "pairs", "clusters", "actions"} <= stages
+    cc = {r["metric"]: r["value"] for r in rows if r["stage"] == "clusters"}
+    assert cc["cc_converged"] == 1.0 and "cc_rounds" in cc
 
 
 def test_resume_invalidated_on_config_change(spark, pages, ckpt):

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
-from py_image_dedup_spark.operators.modes import _capped_self_join
+from py_image_dedup_spark.operators.modes import band_join
 
 
 def _bands_df(spark, rows):
@@ -30,7 +30,7 @@ def test_salted_equals_plain(spark):
     salted_cfg = DedupConfig(bucket_cap=20, salt_threshold=4, n_salts=5)
     plain_cfg = DedupConfig(bucket_cap=20, salt_threshold=10**9)
 
-    # _capped_self_join emits compact uid pairs; translate back to urls
+    # band_join emits compact uid pairs; translate back to urls
     uid_of = {
         r["uid"]: r["url"]
         for r in bands.select(
@@ -41,7 +41,7 @@ def test_salted_equals_plain(spark):
     def collect(cfg):
         return {
             tuple(sorted((uid_of[r["uid_a"]], uid_of[r["uid_b"]]))): r["score"]
-            for r in _capped_self_join(bands, cfg).collect()
+            for r in band_join(bands, cfg).collect()
         }
 
     got_salted = collect(salted_cfg)
@@ -58,5 +58,5 @@ def test_salting_single_salt_degenerate(spark):
     rows = [(f"u{i}", 0, 9) for i in range(6)]
     bands = _bands_df(spark, rows)
     cfg = DedupConfig(salt_threshold=2, n_salts=1, bucket_cap=100)
-    got = _capped_self_join(bands, cfg).count()
+    got = band_join(bands, cfg).count()
     assert got == 15

@@ -79,6 +79,17 @@ def test_cc_adversarial_chain_logarithmic_rounds(spark):
     assert all(r["cluster_id"] == 0 for r in rows)
 
 
+def test_cc_non_convergence_raises(spark):
+    """Stopping at max_iterations with the edge set still changing must fail
+    loudly: the partial edge set would silently split clusters."""
+    n = 200
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "url_a long, url_b long"
+    ).repartition(8)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, single_task_edges=0, max_iterations=1)
+
+
 def test_cc_hub_and_two_blobs(spark):
     """Hub star (1 center, 200 leaves) + two overlapping cliques sharing a
     bridge node — converges fast and labels by component min."""

@@ -7,10 +7,13 @@ modified-file path, processing_manager.py:100-136). Asserts:
 
   * the banded store layout is written (sigs log + band_pfx partitions);
   * latest_signatures resolves the re-upserted url to its newest content;
-  * streamed pair recall: every pair a full batch re-run over the final
-    corpus finds is present in the appended pairs log; extra logged pairs
-    may only involve the re-upserted url (historical pairs from before the
-    upsert — the log keeps them, downstream dedupes).
+  * streamed pair recall: every pair the batch pipeline finds over the
+    final corpus is present in the appended pairs log, compared on content
+    hashes; extra logged pairs may only involve the re-upserted url
+    (historical pairs from before the upsert — the log keeps them,
+    downstream dedupes);
+  * with the hot-bucket cap firing, the stream emits exactly the batch
+    pipeline's pairs.
 """
 
 from __future__ import annotations
@@ -23,9 +26,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
+from py_image_dedup_spark.plans.pipeline import run_dedup_pipeline
 from py_image_dedup_spark.sources.pages import generate_pages
 from py_image_dedup_spark.streaming.incremental import (
-    incremental_pairs,
     latest_signatures,
     run_incremental_stream,
 )
@@ -40,6 +43,27 @@ def _write_wave(df, path: str) -> None:
     df.select(*PAGE_COLS).coalesce(1).write.mode("overwrite").parquet(tmp)
     shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], path)
     shutil.rmtree(tmp)
+
+
+def _batch_hash_pairs(spark, corpus, cfg, ckpt: str):
+    """The batch pipeline's pairs over `corpus` as content-hash pairs, and
+    its url -> content_hash map and metrics rows."""
+    out = run_dedup_pipeline(spark, corpus, cfg, ckpt, resume=False,
+                             until_stage="pairs")
+    hash_of = {
+        r["url"]: r["content_hash"]
+        for r in out["pages_meta"].select("url", "content_hash").collect()
+    }
+    pairs = _hash_pairs(out["pairs"], hash_of)
+    metrics = {r["metric"]: r["value"] for r in out["metrics"].collect()}
+    return pairs, hash_of, metrics
+
+
+def _hash_pairs(pairs, hash_of) -> set:
+    return {
+        frozenset((hash_of[r["url_a"]], hash_of[r["url_b"]]))
+        for r in pairs.select("url_a", "url_b").collect()
+    }
 
 
 @pytest.fixture(scope="module")
@@ -142,25 +166,70 @@ def test_reupserted_url_resolves_to_latest(stream_run):
     assert row[0]["content_hash"] != old["content_hash"]
 
 
-def test_streamed_pairs_match_batch_rerun(stream_run):
+def test_streamed_pairs_match_batch_rerun(stream_run, tmp_path):
     spark, cfg = stream_run["spark"], stream_run["cfg"]
-    streamed = {
-        (r["url_a"], r["url_b"])
-        for r in spark.read.parquet(stream_run["pairs_dir"])
-        .select("url_a", "url_b")
-        .distinct()
-        .collect()
-    }
-    empty = spark.createDataFrame(
-        [], "url string, content_hash string, sig array<int>"
+    rerun, hash_of, _ = _batch_hash_pairs(
+        spark, stream_run["final_corpus"], cfg, str(tmp_path / "batch")
     )
-    _, rerun_pairs = incremental_pairs(stream_run["final_corpus"], empty, cfg)
-    rerun = {(r["url_a"], r["url_b"]) for r in rerun_pairs.collect()}
+    streamed = _hash_pairs(spark.read.parquet(stream_run["pairs_dir"]),
+                           hash_of)
     missing = rerun - streamed
     assert not missing, f"stream missed {len(missing)} pairs: {missing}"
     extra = streamed - rerun
-    url = stream_run["reup_url"]
-    assert all(url in p for p in extra), f"unexpected extra pairs: {extra}"
+    reup = hash_of[stream_run["reup_url"]]
+    assert all(reup in p for p in extra), f"unexpected extra pairs: {extra}"
+
+
+def test_stream_pairs_equal_batch_pairs_when_cap_fires(spark, tmp_path):
+    """A boilerplate family over bucket_cap after wave 1 gains members in
+    wave 2: the stream must exclude its buckets the way batch does, and
+    emit every other pair exactly as batch does (salted tier included)."""
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    # periodic texts of different lengths: distinct content hashes, one
+    # shingle set, so every band of the family is one bucket of its size
+    period = "lorem ipsum dolor sit amet consectetur "
+
+    def boiler(lo: int, hi: int):
+        return spark.createDataFrame(
+            [(f"https://boiler.example/{i}", period * (40 + i))
+             for i in range(lo, hi)],
+            "url string, text string",
+        ).select(
+            "url", F.lit("2024-01-01").cast("timestamp").alias("warc_ts"),
+            F.lit(None).cast("binary").alias("html"), "text",
+            F.lit("en").alias("lang"),
+        )
+
+    pages = generate_pages(spark, 12, seed=7).where(
+        F.col("variant") != "boiler"
+    )
+    wave1 = pages.where(F.col("group_id") < 6).select(*PAGE_COLS)
+    wave1 = wave1.unionByName(boiler(0, 8))
+    wave2 = pages.where(F.col("group_id") >= 6).select(*PAGE_COLS)
+    wave2 = wave2.unionByName(boiler(8, 12))
+    _write_wave(wave1, os.path.join(input_dir, "wave1.parquet"))
+    _write_wave(wave2, os.path.join(input_dir, "wave2.parquet"))
+
+    cfg = DedupConfig(max_dist=0.30, bucket_cap=6, salt_threshold=2,
+                      n_salts=3)
+    q = run_incremental_stream(
+        spark, input_dir, str(tmp_path / "store"), str(tmp_path / "pairs"),
+        cfg, available_now=True, max_files_per_trigger=1,
+        n_band_partitions=16,
+    )
+    assert q.awaitTermination(300), "stream did not drain in time"
+
+    batch, hash_of, metrics = _batch_hash_pairs(
+        spark, wave1.unionByName(wave2), cfg, str(tmp_path / "batch")
+    )
+    assert metrics["hot_buckets"] > 0 and metrics["warm_buckets"] > 0
+    assert batch, "corpus must produce ordinary pairs"
+    streamed = _hash_pairs(spark.read.parquet(str(tmp_path / "pairs")),
+                           hash_of)
+    assert streamed == batch, (
+        f"{len(batch - streamed)} missing, {len(streamed - batch)} extra"
+    )
 
 
 def test_scan_metrics_rows_emitted(stream_run):
