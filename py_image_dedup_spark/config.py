@@ -111,18 +111,7 @@ class DedupConfig:
     # n_salts partitions (A-side salted by url hash, B-side replicated).
     salt_threshold: int = 64
     n_salts: int = 16
-    # Winner election for the exact-dup pre-pass is SIZE-AWARE: the winner
-    # count (distinct content_hash, a key-only agg) picks the strategy.
-    # winners <= limit: shuffle keys only + broadcast-semi-join winner urls
-    # back (cheap; bounded by the broadcast budget). winners > limit (or
-    # limit 0): single min_by shuffle of full rows — always safe, and the
-    # only sane choice at billions of distinct contents.
-    # Sized in BYTES like broadcast_pairs_limit below: winner urls measure
-    # ~60 B each on this corpus, so 1M urls ~ 60 MB — inside the session's
-    # 64 MB broadcast budget (the old 5M-row default reached ~300 MB, ~5x
-    # the budget the same file grants the pair broadcast).
-    broadcast_rep_limit: int = 1_000_000
-    # Verification join shape is size-aware too: candidate-pair lists up to
+    # Verification join shape is size-aware: candidate-pair lists up to
     # this many rows ride as a broadcast into shuffle-free probes of the
     # signature table (signatures never shuffle); above it, plain shuffle
     # joins. The broadcast lands TWICE per verify plan and each build-side

@@ -6,17 +6,26 @@ elasticsearchstorebackend.py:209-222): image-match stores fixed-width
 signature "words" in ES and any shared word makes a candidate; here the
 signature is MinHash and the words are LSH bands.
 
-Dataflow (one distributed plan, no driver loop):
-  signatures --explode bands--> (url, band_id, band_hash)
-    --band_join (operators/modes.py): bucket sizes joined onto the band
-      rows, capped + salted self-join on (band_id, band_hash) over uids-->
-    --groupBy pair (score = #shared bands)--> candidate (uid_a, uid_b)
-    --join back signatures x2, est Jaccard--> verified url pairs
-      (dist <= max_dist)
+Two physical tiers, one semantic — the same (url_a, url_b, dist, score)
+rows, hash collisions included, chosen by the band-row count when the
+caller knows it (operators/modes.py:SINGLE_TASK_BAND_ROWS):
 
-The batch pipeline and the incremental stream run the same join and the
-same verification; the stream adds its band store as join-only rows so a
-pair needs at least one new doc.
+  distributed (large or unknown input; one plan, no driver loop):
+    signatures --explode bands--> (url, band_id, band_hash)
+      --band_join (operators/modes.py): bucket sizes joined onto the band
+        rows, capped + salted self-join on (band_id, band_hash) over uids-->
+      --groupBy pair (score = #shared bands)--> candidate (uid_a, uid_b)
+      --join back signatures x2, est Jaccard--> verified url pairs
+        (dist <= max_dist)
+  single-task (small input: ~2 jobs instead of ~10-25):
+    signatures + band_hash_array --coalesce(1) mapInArrow--> the NumPy
+      kernel functions/band_pairs.py buckets, caps, enumerates, scores and
+      verifies in one task (operators/modes.py:single_task_pairs)
+
+Both tiers take uid = xxhash64(url), the source key and the band hashes
+from the same JVM expressions (band_hash_array here). The batch pipeline
+and the incremental stream run both tiers; the stream adds its store side
+as join-only rows so a pair needs at least one new doc.
 
 Scale notes (north_rule):
  * The band self-join shuffles on (band_id, band_hash) — the natural key;
@@ -62,16 +71,19 @@ def variant_sig_cols(columns, cfg: DedupConfig) -> tuple:
     )
 
 
-def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(url, sig[, sig_v_<variant>..]) -> (url, band_id, band_hash). band_hash =
-    xxhash64 over the band's signature slice + band index; computed
-    JVM-side via transform + posexplode — no Python.
+def band_hash_array(columns, cfg: DedupConfig):
+    """array<long> of a signature row's band hashes, one per band_id:
+    xxhash64 over the band's signature slice + band index, computed
+    JVM-side via transform — no Python.
 
-    With cfg.norm_variants, each variant signature column contributes its
-    own lsh_bands band rows; posexplode over the concatenated band arrays
-    assigns globally distinct band_ids (variant v occupies
-    [v*lsh_bands, (v+1)*lsh_bands)), so variant streams bucket separately
-    inside the SAME self-join — no extra shuffle, just ~(1+v)x band rows."""
+    With cfg.norm_variants, each variant signature column present in
+    `columns` contributes its own lsh_bands hashes after the canonical
+    ones, so variant v occupies band_ids [v*lsh_bands, (v+1)*lsh_bands)
+    and variant streams bucket separately inside the SAME join. Both pair
+    tiers key their buckets on this one expression (explode_bands for the
+    distributed join, operators/modes.py:single_task_pairs for the
+    single-task kernel), so they see identical buckets, collisions
+    included."""
     r = cfg.lsh_rows
 
     def band_arr(sig_col: str):
@@ -80,11 +92,19 @@ def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
             lambda i: F.xxhash64(F.slice(F.col(sig_col), i * r + 1, r), i),
         )
 
-    sig_cols = ["sig", *variant_sig_cols(signatures.columns, cfg)]
-    arrs = [band_arr(c) for c in sig_cols]
-    bands = F.concat(*arrs) if len(arrs) > 1 else arrs[0]
+    arrs = [band_arr(c) for c in ("sig", *variant_sig_cols(columns, cfg))]
+    return F.concat(*arrs) if len(arrs) > 1 else arrs[0]
+
+
+def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(url, sig[, sig_v_<variant>..]) -> (url, band_id, band_hash): one row
+    per entry of band_hash_array, band_id = its position — ~(1+v)x band
+    rows with v variants, no extra shuffle."""
     return signatures.select(
-        "url", F.posexplode(bands).alias("band_id", "band_hash")
+        "url",
+        F.posexplode(band_hash_array(signatures.columns, cfg)).alias(
+            "band_id", "band_hash"
+        ),
     )
 
 

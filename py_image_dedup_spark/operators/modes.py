@@ -44,6 +44,13 @@ def band_join(bands: DataFrame, cfg: DedupConfig,
     returns (uid_a, uid_b, score = #shared buckets) with uid_a < uid_b,
     uid = xxhash64(url).
 
+    This is the DISTRIBUTED tier. For MinHash inputs whose band-row count
+    is known and at most SINGLE_TASK_BAND_ROWS, minhash_pairs and the
+    stream's incremental_pairs run single_task_pairs instead: the same
+    bucketing, cap, pair condition, score and verification in one NumPy
+    task, row-identical output. Simhash and substring always run this
+    join.
+
     `bands` (url, band_id, band_hash) are the NEW docs' band rows. `store`,
     same columns, holds band rows of docs whose pairs were emitted before
     (the stream's band store, pruned to the buckets the new docs touch; it
@@ -201,16 +208,101 @@ def minhash_signatures(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
     return out
 
 
+# Band rows (signature rows x band columns, store side included) at or
+# under which minhash_pairs and the stream's incremental_pairs take the
+# single-task tier. Memory is O(band rows + distinct candidate pairs): the
+# sort keys (~24 B per band row) and signature matrices (~0.6 KB per doc)
+# of the one task, plus 24 B per distinct (uid_a, uid_b, score); raw pair
+# keys are deduped per chunk of 4M. Measured on a 4-vCPU host, local[4],
+# shuffle width 8, minhash_pairs + write over random subsets of an 86k-doc
+# generate_pages corpus, single-task vs distributed seconds: 250k band
+# rows 1.3-2.1 vs 9.7-13.3; 500k 3.0-3.4 vs 14.8-16.0; 1M 8.9-9.4 vs
+# 25.6-25.8; 2M 7.1-7.9 vs 23.9-26.7. The cut sits at half the largest
+# size measured: one task stays under ~10 s, and a host with more cores
+# than this one shortens only the distributed tier.
+SINGLE_TASK_BAND_ROWS = 1_000_000
+
+
+def single_task_tier(band_rows: int | None) -> bool:
+    """True when a KNOWN band-row count fits the single-task tier; an
+    unknown count (a resumed run, a driver query) keeps the distributed
+    tier, so the choice can be skipped but never wrong."""
+    return band_rows is not None and band_rows <= SINGLE_TASK_BAND_ROWS
+
+
+def single_task_pairs(new_sigs: DataFrame, cfg: DedupConfig,
+                      store_sigs: DataFrame | None = None,
+                      stats: dict | None = None,
+                      full_band: bool = False) -> DataFrame:
+    """band_join + verify_pairs in ONE task: every signature row, tagged
+    new or store, flows through coalesce(1) into the NumPy kernel
+    functions/band_pairs.py, which buckets, caps, enumerates, scores and
+    verifies in place. Same contract and rows as the distributed tier
+    (url_a, url_b, dist, score) — the kernel gets uid, source key and band
+    hashes from the JVM expressions that tier uses. Salting is moot
+    inside one task.
+
+    `store_sigs` (stream only) is the store's signature view; rows whose
+    url is re-upserted in `new_sigs` drop out. `full_band` is
+    minhash_pairs' full-band short-circuit. `stats`, if given, gets
+    single_task=True now and an Observation under "observation" whose
+    hot_buckets / hot_bucket_rows / warm_buckets land when the caller's
+    one write runs (no extra job)."""
+    from pyspark.sql import Observation
+
+    from py_image_dedup_spark.functions.band_pairs import (
+        OUT_SCHEMA,
+        STAT_COLS,
+        pairs_kernel,
+    )
+
+    sig_cols = ("sig",) + _minhash.variant_sig_cols(new_sigs.columns, cfg)
+    rows = new_sigs.select("url", *sig_cols, F.lit(True).alias("new"))
+    if store_sigs is not None:
+        rows = rows.unionByName(
+            store_sigs.join(new_sigs.select("url"), "url", "left_anti")
+            .select("url", *sig_cols, F.lit(False).alias("new"))
+        )
+    src = [] if cfg.across_sources else [source_of("url", cfg).alias("src")]
+    rows = rows.where("url IS NOT NULL").select(
+        F.xxhash64("url").alias("uid"), "url", "new", *src,
+        _minhash.band_hash_array(sig_cols, cfg).alias("bands"), *sig_cols,
+    )
+    out = rows.coalesce(1).mapInArrow(
+        pairs_kernel(sig_cols, float(cfg.max_dist), cfg.bucket_cap,
+                     cfg.salt_threshold, bool(src), full_band),
+        OUT_SCHEMA,
+    )
+    if stats is not None:
+        obs = Observation()
+        out = out.observe(obs, *[F.sum(c).alias(c) for c in STAT_COLS])
+        stats["single_task"] = True
+        stats["observation"] = obs
+    return out.where("url_a IS NOT NULL").select(
+        "url_a", "url_b", "dist", "score"
+    )
+
+
 def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
-                  stats: dict | None = None) -> DataFrame:
-    bands = _minhash.explode_bands(signatures, cfg)
-    # materialized once: the size probe and both verify branches read it
-    pairs = band_join(bands, cfg, stats=stats).localCheckpoint(eager=True)
+                  stats: dict | None = None,
+                  known_rows: int | None = None) -> DataFrame:
+    """Verified pairs over `signatures`. `known_rows`, the signature row
+    count when the caller already measured it, picks the tier: band rows
+    (rows x band columns) at or under SINGLE_TASK_BAND_ROWS run
+    single_task_pairs, anything else (or unknown) the distributed
+    band_join + verify_pairs below."""
     # variant sig columns actually present (a store written without
     # variants verifies on "sig" alone even if cfg now asks for variants)
     sig_cols = ("sig",) + _minhash.variant_sig_cols(
         signatures.columns, cfg
     )
+    n_bands = cfg.lsh_bands * len(sig_cols)
+    if single_task_tier(None if known_rows is None else known_rows * n_bands):
+        return single_task_pairs(signatures, cfg, stats=stats,
+                                 full_band=True)
+    bands = _minhash.explode_bands(signatures, cfg)
+    # materialized once: the size probe and both verify branches read it
+    pairs = band_join(bands, cfg, stats=stats).localCheckpoint(eager=True)
     # Full-band-agreement short-circuit: a pair can share at most one
     # bucket per band, so score == n_total_bands means EVERY band of EVERY
     # variant matched => every signature slice equal => est Jaccard exactly
@@ -219,7 +311,7 @@ def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
     # both sig-carrying probes and resolve uid->url through a slim map join
     # instead. Output is provably identical to verifying them (dist 0.0
     # either way).
-    b = F.lit(float(cfg.lsh_bands * len(sig_cols)))
+    b = F.lit(float(n_bands))
     # ONE cheap agg job over the checkpointed pairs sizes both subsets, and
     # each picks the shape that never shuffles the signature table when its
     # pair list is broadcastable
@@ -352,7 +444,12 @@ def signature_stage(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def pairs_stage(signatures: DataFrame, cfg: DedupConfig,
-                stats: dict | None = None) -> DataFrame:
+                stats: dict | None = None,
+                known_rows: int | None = None) -> DataFrame:
+    """`known_rows` (the measured signature row count) lets minhash pick
+    its single-task tier; the other modes have one tier."""
     if cfg.mode not in MODES:
         raise ValueError(f"unknown mode {cfg.mode!r}; one of {sorted(MODES)}")
+    if cfg.mode == "minhash":
+        return minhash_pairs(signatures, cfg, stats, known_rows=known_rows)
     return MODES[cfg.mode][1](signatures, cfg, stats)

@@ -214,16 +214,6 @@ def _fanout_small_input(spark: SparkSession, pages: DataFrame) -> DataFrame:
     return pages.repartition(par)
 
 
-def partition_histogram(df: DataFrame) -> DataFrame:
-    """Per-partition row counts for a stage output — the lineage view used
-    to spot skew (one shuffle-free pass: spark_partition_id + local agg)."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .orderBy("partition_id")
-    )
-
-
 def run_dedup_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -388,21 +378,41 @@ def run_dedup_pipeline(
     if until_stage == "signatures":
         return _finish()
 
-    def build_pairs() -> DataFrame:
-        pair_stats: dict = {}
-        out = pairs_stage(signatures, cfg, pair_stats)
-        # A5 hot-bucket report: skew-tier counts from the band self-join
+    def stage_rows(stage: str) -> int | None:
+        # a stage's committed row count, measured by its write's
+        # Observation; absent when the stage resumed
+        return next(
+            (
+                int(m["value"]) for m in metrics
+                if m["stage"] == stage and m["metric"] == "rows"
+            ),
+            None,
+        )
+
+    pair_stats: dict = {}
+    pairs = _checkpointed(
+        spark, p("pairs"), resume,
+        # the signatures commit already counted its rows: a small input
+        # takes the single-task band join + verify (operators/modes.py)
+        lambda: pairs_stage(signatures, cfg, pair_stats,
+                            known_rows=stage_rows("signatures")),
+        metrics, "pairs",
+    )
+    if pair_stats:  # built, not resumed
+        obs = pair_stats.pop("observation", None)
+        if obs is not None:  # the single-task tier's counts ride its write
+            pair_stats.update(obs.get)
+        # A5 hot-bucket report: skew-tier counts from the band join
         for k in ("hot_buckets", "hot_bucket_rows", "warm_buckets"):
             if k in pair_stats:
                 metrics.append(
                     {"stage": "pairs", "metric": k,
                      "value": float(pair_stats[k])}
                 )
-        return out
-
-    pairs = _checkpointed(
-        spark, p("pairs"), resume, build_pairs, metrics, "pairs"
-    )
+        metrics.append(
+            {"stage": "pairs", "metric": "single_task",
+             "value": float(pair_stats.get("single_task", False))}
+        )
     results["pairs"] = pairs
     if until_stage == "pairs":
         return _finish()
@@ -424,23 +434,16 @@ def run_dedup_pipeline(
         # small graphs take the one-task union-find tier instead of serial
         # star rounds (components.py; falls back to distributed rounds on
         # resume, where the count row is absent)
-        n_pairs = next(
-            (
-                int(m["value"]) for m in metrics
-                if m["stage"] == "pairs" and m["metric"] == "rows"
-            ),
-            None,
-        )
         rep_clusters = connected_components(
             edges, vertices=signatures.select(F.xxhash64("url").alias("uid")),
             src="uid_a", dst="uid_b", vertex_col="uid", stats=cc_stats,
-            known_edge_count=n_pairs,
+            known_edge_count=stage_rows("pairs"),
             single_task_edges=cfg.cc_single_task_edges,
         )
-        for k in ("rounds", "converged"):
+        for k in ("rounds", "converged", "single_task"):
             metrics.append(
                 {"stage": "clusters", "metric": f"cc_{k}",
-                 "value": float(cc_stats[k])}
+                 "value": float(cc_stats.get(k, False))}
             )
         # Per-representative min distance / max score, aggregated at REP
         # level (uid-keyed, rep-count-sized shuffles) before the corpus

@@ -30,12 +30,17 @@ from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.operators.exact import (
-    exact_unique_representatives,
+    elect_representatives_mapside,
     with_content_hash,
 )
 from py_image_dedup_spark.operators.incremental import merge_signatures
 from py_image_dedup_spark.operators.lsh import explode_bands, verify_pairs
-from py_image_dedup_spark.operators.modes import band_join, minhash_signatures
+from py_image_dedup_spark.operators.modes import (
+    band_join,
+    minhash_signatures,
+    single_task_pairs,
+    single_task_tier,
+)
 
 
 def _require_variant_cols(store_columns, cfg: DedupConfig) -> None:
@@ -57,13 +62,17 @@ def _require_variant_cols(store_columns, cfg: DedupConfig) -> None:
 
 def new_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """A micro-batch's signature rows (url, content_hash, sig[, sig_v_*]):
-    one exact-dup representative per content hash, signed the way batch
-    signs (cfg.norm_variants included)."""
-    reps = exact_unique_representatives(with_content_hash(pages))
-    vcols = tuple(f"sig_v_{n}" for n in cfg.norm_variants)
-    return minhash_signatures(reps, cfg).select(
-        "url", "content_hash", "sig", *vcols
+    one exact-dup representative per content hash, signed and elected the
+    way batch's signatures stage does it (every row signed as a narrow
+    map, then the key-only map-side election; cfg.norm_variants
+    included)."""
+    hashed = with_content_hash(pages).select("content_hash", "url",
+                                             "norm_text")
+    reps = elect_representatives_mapside(
+        minhash_signatures(hashed, cfg).drop("norm_text")
     )
+    vcols = tuple(f"sig_v_{n}" for n in cfg.norm_variants)
+    return reps.select("url", "content_hash", "sig", *vcols)
 
 
 def incremental_pairs(
@@ -71,6 +80,7 @@ def incremental_pairs(
     store_sigs: DataFrame | None,
     store_bands: DataFrame | None,
     cfg: DedupConfig,
+    band_rows: int | None = None,
 ) -> DataFrame:
     """The one micro-batch step: verified pairs (url_a, url_b, dist, score)
     with at least one side in `new_sigs` — existing-vs-existing pairs were
@@ -79,20 +89,32 @@ def incremental_pairs(
 
     `store_sigs` is the store's current signature view before this batch
     and `store_bands` its band rows (url, band_id, band_hash), possibly
-    already pruned; both None for an empty store. Store bands are cut to
-    the buckets the new docs touch and drop re-upserted urls, then join as
-    the store side of the batch pipeline's band join (operators/modes.py:
-    band_join), so the stream gets the same bucket cap and salting as
-    batch. Verification is batch's uid-keyed verify_pairs against the
-    store view with this batch's signatures upserted.
+    already pruned; both None for an empty store.
+
+    Two tiers, one semantic (batch's minhash_pairs has the same two):
+      band_rows known and <= modes.SINGLE_TASK_BAND_ROWS
+          single_task_pairs: the new rows and the store view minus
+          re-upserted urls go through one NumPy task; `store_bands` is
+          not read (it may be None).
+      otherwise
+          store bands are cut to the buckets the new docs touch and drop
+          re-upserted urls, then join as the store side of the batch
+          pipeline's band join (operators/modes.py:band_join), so the
+          stream gets the same bucket cap and salting as batch.
+          Verification is batch's uid-keyed verify_pairs against the
+          store view with this batch's signatures upserted.
+    `band_rows` counts new plus store band rows; an upper bound will do.
     """
+    if store_sigs is not None:
+        # fail BEFORE the caller appends a mixed-schema file to the log
+        _require_variant_cols(store_sigs.columns, cfg)
+    if single_task_tier(band_rows):
+        return single_task_pairs(new_sigs, cfg, store_sigs=store_sigs)
     sig_cols = ("sig", *(f"sig_v_{n}" for n in cfg.norm_variants))
     new_bands = explode_bands(new_sigs, cfg)
     sigs = new_sigs.select("url", *sig_cols)
     store = None
     if store_sigs is not None:
-        # fail BEFORE the caller appends a mixed-schema file to the log
-        _require_variant_cols(store_sigs.columns, cfg)
         sigs = merge_signatures(store_sigs.select("url", *sig_cols), sigs)
         keys = ["band_id", "band_hash"]
         store = store_bands.join(
@@ -359,6 +381,22 @@ def attach_metrics_listener(spark: SparkSession, metrics_path: str):
     return listener
 
 
+def _parquet_rows(path: str) -> int | None:
+    """Row count of a parquet directory from its file footers (driver-side
+    metadata reads, no Spark job); None when a footer cannot be read."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    try:
+        return sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(path, "*.parquet"))
+        )
+    except (OSError, ValueError):  # a file vanished or is not parquet
+        return None
+
+
 def run_incremental_stream(
     spark: SparkSession,
     input_path: str,
@@ -378,13 +416,23 @@ def run_incremental_stream(
 
     Each micro-batch keeps the latest row per url, signs one exact-dup
     representative per content hash (new_signatures), then runs the one
-    micro-batch step, incremental_pairs: the new docs' band rows plus the
-    pruned store band rows go through the batch pipeline's capped, salted
-    band join (operators/modes.py:band_join) and batch's uid-keyed
-    verify_pairs. For the same input the stream therefore emits the batch
-    pipeline's pairs, hot-bucket cap included, as long as a bucket that
-    ends over bucket_cap is already over it when its first pair would
-    form: a pair emitted while its bucket was under the cap stays emitted.
+    micro-batch step, incremental_pairs, in one of batch's two tiers:
+      single-task   while new + store band rows (the store side bounded by
+                    the sig log's parquet-footer row count, no job) fit
+                    modes.SINGLE_TASK_BAND_ROWS: the new signatures and the
+                    store's current signature view go through one NumPy
+                    task (operators/modes.py:single_task_pairs); the band
+                    store is not read
+      distributed   otherwise: the new docs' band rows plus the pruned
+                    store band rows go through the batch pipeline's capped,
+                    salted band join (operators/modes.py:band_join) and
+                    batch's uid-keyed verify_pairs.
+    For the same input the stream therefore emits the batch pipeline's
+    pairs, hot-bucket cap included, as long as a bucket that ends over
+    bucket_cap is already over it when its first pair would form: a pair
+    emitted while its bucket was under the cap stays emitted. The band
+    store, the sig log and scan_metrics are appended on every batch in
+    either tier.
 
     Storage layout — all APPEND-only, so no micro-batch ever deletes files
     another plan still references, and per-batch write cost is O(batch):
@@ -410,6 +458,7 @@ def run_incremental_stream(
     """
     sig_path = os.path.join(store_path, "sigs")
     bands_path = os.path.join(store_path, "bands")
+    n_bands = cfg.lsh_bands * (1 + len(cfg.norm_variants))
 
     if metrics_path is not None:
         attach_metrics_listener(spark, metrics_path)
@@ -436,37 +485,47 @@ def run_incremental_stream(
         new_bands = explode_bands(new_sigs, cfg).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        touched_pfx = [
-            r[0]
-            for r in new_bands.select(
+        # one job yields the touched band partitions and, riding along,
+        # the new docs' band-row count for the tier choice
+        per_pfx = (
+            new_bands.groupBy(
                 F.pmod("band_hash", F.lit(n_band_partitions)).alias("p")
             )
-            .distinct()
+            .count()
             .collect()
-        ]
-        if not touched_pfx:  # empty micro-batch
+        )
+        if not per_pfx:  # empty micro-batch
             return
+        touched_pfx = [r[0] for r in per_pfx]
+        band_rows = sum(r[1] for r in per_pfx)
 
         store_sigs = store_bands = None
         if os.path.exists(os.path.join(sig_path, "_SUCCESS")):
-            # computed once for both readers below (the superseded-row
-            # filter and verification), and a plan leaf for the band join
-            store_sigs = latest_signatures(
-                spark.read.parquet(sig_path)
-            ).localCheckpoint(eager=False)
-            # partition-pruned scan: only band_pfx partitions that contain a
-            # touched bucket are read; rows superseded by a later re-upsert
-            # of the same url are dropped
-            store_bands = (
-                spark.read.parquet(bands_path)
-                .where(F.col("band_pfx").isin(touched_pfx))
-                .join(
-                    store_sigs.select("url", "batch_id"),
-                    ["url", "batch_id"],
-                    "left_semi",
-                )
+            store_sigs = latest_signatures(spark.read.parquet(sig_path))
+            # the log's parquet-footer row count bounds the current view
+            # from above (no job); every signature row has n_bands bands
+            log_rows = _parquet_rows(sig_path)
+            band_rows = (
+                None if log_rows is None else band_rows + log_rows * n_bands
             )
-        verified = incremental_pairs(new_sigs, store_sigs, store_bands, cfg)
+            if not single_task_tier(band_rows):
+                # computed once for both readers below (the superseded-row
+                # filter and verification), and a plan leaf for the join
+                store_sigs = store_sigs.localCheckpoint(eager=False)
+                # partition-pruned scan: only band_pfx partitions that
+                # contain a touched bucket are read; rows superseded by a
+                # later re-upsert of the same url are dropped
+                store_bands = (
+                    spark.read.parquet(bands_path)
+                    .where(F.col("band_pfx").isin(touched_pfx))
+                    .join(
+                        store_sigs.select("url", "batch_id"),
+                        ["url", "batch_id"],
+                        "left_semi",
+                    )
+                )
+        verified = incremental_pairs(new_sigs, store_sigs, store_bands, cfg,
+                                     band_rows=band_rows)
 
         # appends only — nothing a concurrent or later plan reads is deleted
         verified.write.mode("append").parquet(pairs_path)

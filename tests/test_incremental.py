@@ -84,8 +84,9 @@ def test_incremental_batch_matches_full_rerun(spark):
     first = all_pages.where(F.col("group_id") < 8)
     second = all_pages.where(F.col("group_id") >= 8)
 
-    store0 = new_signatures(first, cfg)
-    new_sigs = new_signatures(second, cfg)
+    # cached: the step's plan reads each side several times
+    store0 = new_signatures(first, cfg).cache()
+    new_sigs = new_signatures(second, cfg).cache()
     new_pairs = incremental_pairs(
         new_sigs, store0, explode_bands(store0, cfg), cfg
     )

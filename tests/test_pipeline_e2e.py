@@ -146,8 +146,16 @@ def test_boiler_template_cluster_and_hot_bucket_cap(spark, pages, ckpt):
     assert len(b2) == 4 and all(r["action"] == "keep" for r in b2)
 
 
-def test_resume_skips_completed_stages_and_is_identical(spark, pages, ckpt):
+def test_resume_skips_completed_stages_and_is_identical(spark, pages, ckpt,
+                                                       monkeypatch):
+    # the distributed pairs tier, end to end through the pipeline
+    from py_image_dedup_spark.operators import modes
+
+    monkeypatch.setattr(modes, "SINGLE_TASK_BAND_ROWS", -1)
     out1 = run(spark, pages, ckpt)
+    assert out1["metrics"].where(
+        "stage = 'pairs' AND metric = 'single_task'"
+    ).first()["value"] == 0.0
     a1 = sorted(
         (r["url"], r["cluster_id"], r["action"])
         for r in out1["actions"].collect()
@@ -208,6 +216,12 @@ def test_metrics_emitted(spark, pages, ckpt):
     assert {"pages_meta", "signatures", "pairs", "clusters", "actions"} <= stages
     cc = {r["metric"]: r["value"] for r in rows if r["stage"] == "clusters"}
     assert cc["cc_converged"] == 1.0 and "cc_rounds" in cc
+    # a 40-group corpus fits both single-task tiers; the pairs tier's
+    # hot-bucket report rides its write's Observation
+    assert cc["cc_single_task"] == 1.0
+    pairs = {r["metric"]: r["value"] for r in rows if r["stage"] == "pairs"}
+    assert pairs["single_task"] == 1.0
+    assert {"hot_buckets", "hot_bucket_rows", "warm_buckets"} <= set(pairs)
 
 
 def test_resume_invalidated_on_config_change(spark, pages, ckpt):

@@ -180,10 +180,15 @@ def test_streamed_pairs_match_batch_rerun(stream_run, tmp_path):
     assert all(reup in p for p in extra), f"unexpected extra pairs: {extra}"
 
 
-def test_stream_pairs_equal_batch_pairs_when_cap_fires(spark, tmp_path):
+def test_stream_pairs_equal_batch_pairs_when_cap_fires(spark, tmp_path,
+                                                       monkeypatch):
     """A boilerplate family over bucket_cap after wave 1 gains members in
     wave 2: the stream must exclude its buckets the way batch does, and
-    emit every other pair exactly as batch does (salted tier included)."""
+    emit every other pair exactly as batch does — on the single-task pairs
+    tier this size takes, and on the distributed tier (band_join, salted
+    tier included)."""
+    from py_image_dedup_spark.operators import modes
+
     input_dir = str(tmp_path / "in")
     os.makedirs(input_dir)
     # periodic texts of different lengths: distinct content hashes, one
@@ -213,23 +218,29 @@ def test_stream_pairs_equal_batch_pairs_when_cap_fires(spark, tmp_path):
 
     cfg = DedupConfig(max_dist=0.30, bucket_cap=6, salt_threshold=2,
                       n_salts=3)
-    q = run_incremental_stream(
-        spark, input_dir, str(tmp_path / "store"), str(tmp_path / "pairs"),
-        cfg, available_now=True, max_files_per_trigger=1,
-        n_band_partitions=16,
-    )
-    assert q.awaitTermination(300), "stream did not drain in time"
-
     batch, hash_of, metrics = _batch_hash_pairs(
         spark, wave1.unionByName(wave2), cfg, str(tmp_path / "batch")
     )
     assert metrics["hot_buckets"] > 0 and metrics["warm_buckets"] > 0
+    assert metrics["single_task"] == 1.0
     assert batch, "corpus must produce ordinary pairs"
-    streamed = _hash_pairs(spark.read.parquet(str(tmp_path / "pairs")),
-                           hash_of)
-    assert streamed == batch, (
-        f"{len(batch - streamed)} missing, {len(streamed - batch)} extra"
-    )
+
+    for tier, limit in (("single", modes.SINGLE_TASK_BAND_ROWS),
+                        ("distributed", -1)):
+        monkeypatch.setattr(modes, "SINGLE_TASK_BAND_ROWS", limit)
+        q = run_incremental_stream(
+            spark, input_dir, str(tmp_path / tier / "store"),
+            str(tmp_path / tier / "pairs"), cfg, available_now=True,
+            max_files_per_trigger=1, n_band_partitions=16,
+        )
+        assert q.awaitTermination(300), "stream did not drain in time"
+        streamed = _hash_pairs(
+            spark.read.parquet(str(tmp_path / tier / "pairs")), hash_of
+        )
+        assert streamed == batch, (
+            f"{tier}: {len(batch - streamed)} missing, "
+            f"{len(streamed - batch)} extra"
+        )
 
 
 def test_scan_metrics_rows_emitted(stream_run):
@@ -252,11 +263,16 @@ def test_scan_metrics_rows_emitted(stream_run):
     assert any(r["store_scanned"] for r in rows.values())
 
 
-def test_store_scan_pruning_engages_on_small_batch(spark, tmp_path):
+def test_store_scan_pruning_engages_on_small_batch(spark, tmp_path,
+                                                   monkeypatch):
     """A single-doc update against a wide store must NOT read the whole
     band store: one doc carries at most lsh_bands distinct buckets, so with
     n_band_partitions > lsh_bands the pruned scan touches a strict subset
-    of the partitions — the T7 100x-scale assumption, now asserted."""
+    of the partitions — the T7 100x-scale assumption, now asserted. Only
+    the distributed pairs tier reads the band store, so force it."""
+    from py_image_dedup_spark.operators import modes
+
+    monkeypatch.setattr(modes, "SINGLE_TASK_BAND_ROWS", -1)
     input_dir = str(tmp_path / "in")
     store_dir = str(tmp_path / "store")
     pairs_dir = str(tmp_path / "pairs")
