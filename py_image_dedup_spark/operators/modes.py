@@ -213,20 +213,29 @@ def minhash_signatures(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
 # single-task tier. Memory is O(band rows + distinct candidate pairs): the
 # sort keys (~24 B per band row) and signature matrices (~0.6 KB per doc)
 # of the one task, plus 24 B per distinct (uid_a, uid_b, score); raw pair
-# keys are deduped per chunk of 4M. Measured on a 4-vCPU host, local[4],
-# shuffle width 8, minhash_pairs + write over random subsets of an 86k-doc
-# generate_pages corpus, single-task vs distributed seconds: 250k band
-# rows 1.3-2.1 vs 9.7-13.3; 500k 3.0-3.4 vs 14.8-16.0; 1M 8.9-9.4 vs
-# 25.6-25.8; 2M 7.1-7.9 vs 23.9-26.7. The cut sits at half the largest
-# size measured: one task stays under ~10 s, and a host with more cores
-# than this one shortens only the distributed tier.
+# keys are deduped per chunk of 4M.
+# Measured on a 4-vCPU host, local[4], shuffle width 8, over random
+# subsets of an 86k-doc generate_pages corpus, single-task vs distributed:
+#   batch, minhash_pairs + write (s): 250k band rows 1.3-2.1 vs 9.7-13.3;
+#     500k 3.0-3.4 vs 14.8-16.0; 1M 8.9-9.4 vs 25.6-25.8; 2M 7.1-7.9 vs
+#     23.9-26.7. The kernel's Python worker peaked at 661 MB RSS at 1M
+#     (726k pairs) and 502 MB at 2M (607k pairs): pairs, not band rows,
+#     drive it.
+#   stream, micro-batch of 105 pages against a store of that size
+#     (trigger s, median of 5 per tier, tiers alternating): 24k 2.5 vs
+#     4.7; 250k 2.9 vs 4.6; 500k 3.8 vs 5.8; 1M 4.6 vs 6.1; 1.5M 7.1 vs
+#     9.5; 2M 7.0 vs 9.1.
+# No crossover was found up to 2M on either path. The cut at half of that
+# is a conservative choice, not a measured bound: the time and memory of
+# one task above 2M, and whether more cores move the crossover (they
+# shorten only the distributed tier), are unverified.
 SINGLE_TASK_BAND_ROWS = 1_000_000
 
 
 def single_task_tier(band_rows: int | None) -> bool:
     """True when a KNOWN band-row count fits the single-task tier; an
-    unknown count (a resumed run, a driver query) keeps the distributed
-    tier, so the choice can be skipped but never wrong."""
+    unknown count (a driver query, an unreadable parquet footer) keeps
+    the distributed tier, so the choice can be skipped but never wrong."""
     return band_rows is not None and band_rows <= SINGLE_TASK_BAND_ROWS
 
 

@@ -41,6 +41,7 @@ from py_image_dedup_spark.operators.exact import (
 )
 from py_image_dedup_spark.operators.modes import pairs_stage, signature_stage
 from py_image_dedup_spark.operators.select import select_keepers
+from py_image_dedup_spark.sources import parquet_rows
 
 STAGES = ("pages_meta", "signatures", "pairs", "clusters", "actions")
 
@@ -86,13 +87,19 @@ def _checkpointed(
     """Stage seam: build+write parquet unless a committed output exists.
 
     Row count rides on the write via observe() — no extra job, no re-read;
-    the partition count comes from the committed files. Every post-write
+    a resumed stage reads it from the committed files' parquet footers. The
+    partition count comes from the committed files. Every post-write
     action here is driver-serial at any cluster size, so it must stay O(1).
     """
     t0 = time.time()
     if resume and _done(path):
         df = spark.read.parquet(path)
         metrics.append({"stage": stage, "metric": "resumed", "value": 1.0})
+        n_rows = parquet_rows(path)
+        if n_rows is not None:
+            metrics.append(
+                {"stage": stage, "metric": "rows", "value": float(n_rows)}
+            )
         return df
     from pyspark.sql import Observation
 
@@ -379,8 +386,8 @@ def run_dedup_pipeline(
         return _finish()
 
     def stage_rows(stage: str) -> int | None:
-        # a stage's committed row count, measured by its write's
-        # Observation; absent when the stage resumed
+        # a stage's committed row count: its write's Observation, or the
+        # parquet footers of a resumed stage
         return next(
             (
                 int(m["value"]) for m in metrics
@@ -430,10 +437,9 @@ def run_dedup_pipeline(
             F.xxhash64("url_a").alias("uid_a"),
             F.xxhash64("url_b").alias("uid_b"),
         )
-        # the pairs commit already measured its row count — hand it to CC so
-        # small graphs take the one-task union-find tier instead of serial
-        # star rounds (components.py; falls back to distributed rounds on
-        # resume, where the count row is absent)
+        # the pairs commit already measured its row count (or, resumed, its
+        # footers hold it) — hand it to CC so small graphs take the one-task
+        # union-find tier instead of serial star rounds (components.py)
         rep_clusters = connected_components(
             edges, vertices=signatures.select(F.xxhash64("url").alias("uid")),
             src="uid_a", dst="uid_b", vertex_col="uid", stats=cc_stats,

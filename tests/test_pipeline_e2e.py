@@ -174,6 +174,19 @@ def test_resume_skips_completed_stages_and_is_identical(spark, pages, ckpt,
         for r in out2["metrics"].where("metric = 'resumed'").collect()
     }
     assert {"pages_meta", "signatures", "pairs"} <= resumed
+    # a resumed stage reads its row count from the parquet footers, so the
+    # rebuilt clusters stage still knows the edge count and takes CC's
+    # single-task tier
+    def rows(out):
+        return {
+            r["stage"]: r["value"]
+            for r in out["metrics"].where("metric = 'rows'").collect()
+        }
+    assert rows(out2)["pairs"] == rows(out1)["pairs"]
+    assert rows(out2)["signatures"] == rows(out1)["signatures"]
+    assert out2["metrics"].where(
+        "stage = 'clusters' AND metric = 'cc_single_task'"
+    ).first()["value"] == 1.0
 
 
 def test_dup_pair_recall_on_golden_corpus(spark, pages, ckpt):

@@ -243,24 +243,34 @@ def test_stream_pairs_equal_batch_pairs_when_cap_fires(spark, tmp_path,
         )
 
 
+def _scan_rows(spark, store_dir: str, total: int, distributed: bool):
+    """scan_metrics rows by batch id, checked for the pairs tier that ran:
+    one row per micro-batch; a batch that reads no band store (the first
+    one, or any single-task batch) records store_scanned=False and 0
+    touched partitions, a scanning batch 0 < touched <= total."""
+    sm = spark.read.parquet(os.path.join(store_dir, "scan_metrics"))
+    rows = {r["batch_id"]: r for r in sm.collect()}
+    assert len(rows) >= 2
+    assert all(r["total_band_partitions"] == total for r in rows.values())
+    first = rows[min(rows)]
+    for r in rows.values():
+        scanned = distributed and r is not first
+        assert r["store_scanned"] == scanned
+        if scanned:
+            assert 0 < r["touched_band_partitions"] <= total
+        else:
+            assert r["touched_band_partitions"] == 0
+    return rows
+
+
 def test_scan_metrics_rows_emitted(stream_run):
     """Pruning-selectivity observability (VERDICT r4 item 6): one
     scan_metrics row per micro-batch recording scanned-vs-total band
-    partitions. The first batch has no store yet (store_scanned=False)."""
-    spark = stream_run["spark"]
-    sm = spark.read.parquet(
-        os.path.join(stream_run["store_dir"], "scan_metrics")
-    )
-    rows = {r["batch_id"]: r for r in sm.collect()}
-    assert len(rows) >= 2
-    assert all(r["total_band_partitions"] == 16 for r in rows.values())
-    assert all(
-        0 < r["touched_band_partitions"] <= r["total_band_partitions"]
-        for r in rows.values()
-    )
-    first = rows[min(rows)]
-    assert not first["store_scanned"]
-    assert any(r["store_scanned"] for r in rows.values())
+    partitions. This small store takes the single-task pairs tier, which
+    reads no band store; the distributed tier's rows are checked by
+    test_store_scan_pruning_engages_on_small_batch."""
+    _scan_rows(stream_run["spark"], stream_run["store_dir"], 16,
+               distributed=False)
 
 
 def test_store_scan_pruning_engages_on_small_batch(spark, tmp_path,
@@ -293,10 +303,8 @@ def test_store_scan_pruning_engages_on_small_batch(spark, tmp_path,
     )
     assert q.awaitTermination(300), "stream did not drain in time"
 
-    sm = spark.read.parquet(os.path.join(store_dir, "scan_metrics"))
-    rows = {r["batch_id"]: r for r in sm.collect()}
+    rows = _scan_rows(spark, store_dir, 64, distributed=True)
     small = rows[max(rows)]
-    assert small["store_scanned"]
     assert small["touched_band_partitions"] <= cfg.lsh_bands
     assert small["touched_band_partitions"] < small["total_band_partitions"], (
         "small-batch store scan read every band partition — pruning "
