@@ -10,9 +10,10 @@ subcommands over one shared config surface).
 `analyse` is `deduplicate` stopped after the signature stage (phases 2-3
 of the reference lifecycle, deduplicator.py:63-73); `daemon` launches the
 Structured Streaming incremental job; `compact` is the store maintenance
-job (drop superseded rows — the Iceberg rewrite_data_files analog). Every subcommand accepts the same
-layered config: dataclass defaults < --config-yaml < PY_IMAGE_DEDUP_SPARK_*
-environment variables < explicit flags.
+job (drop superseded signature-log rows — the Iceberg rewrite_data_files
+analog). Every subcommand accepts the same layered config: dataclass
+defaults < --config-yaml < PY_IMAGE_DEDUP_SPARK_* environment variables <
+explicit flags.
 """
 
 from __future__ import annotations

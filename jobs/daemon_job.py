@@ -37,7 +37,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="directory where new page parquet files appear "
                         "(the watchdog watch-dir analog)")
     p.add_argument("--store", required=True,
-                   help="signature/band store root (append-only)")
+                   help="signature store root (append-only log)")
     p.add_argument("--pairs", required=True,
                    help="verified-pairs output (appended per batch)")
     p.add_argument("--config-yaml", default=None,
@@ -49,7 +49,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                    help="process everything currently pending, then exit "
                         "(trigger availableNow)")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
-    p.add_argument("--band-partitions", type=int, default=64)
     p.add_argument("--metrics", default=None,
                    help="parquet path for per-micro-batch metrics rows "
                         "(the reference daemon's live Prometheus-summary "
@@ -92,7 +91,6 @@ def main(argv: list[str] | None = None) -> int:
         trigger_seconds=args.trigger_seconds,
         available_now=args.drain,
         max_files_per_trigger=args.max_files_per_trigger,
-        n_band_partitions=args.band_partitions,
         metrics_path=args.metrics,
     )
     print(f"daemon streaming query started: {query.id}", flush=True)
@@ -102,20 +100,22 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def compact_main(argv: list[str] | None = None) -> int:
-    """`cli.py compact` — rewrite the daemon's append-only store dropping
-    superseded rows (streaming/incremental.py:compact_band_store). Run it
-    while no daemon is processing batches; prints the before/after row
-    counts as one JSON line."""
+    """`cli.py compact` — rewrite the daemon's append-only signature log
+    dropping superseded rows (streaming/incremental.py:
+    compact_signature_log). Run it while no daemon is processing batches;
+    prints the before/after row counts as one JSON line."""
     import argparse as _ap
     import json
 
     p = _ap.ArgumentParser(description=compact_main.__doc__)
     p.add_argument("--store", required=True,
-                   help="signature/band store root written by the daemon")
+                   help="signature store root written by the daemon")
     p.add_argument("--master", default=None)
     p.add_argument("--shuffle-partitions", type=int, default=None)
     args = p.parse_args(argv)
-    from py_image_dedup_spark.streaming.incremental import compact_band_store
+    from py_image_dedup_spark.streaming.incremental import (
+        compact_signature_log,
+    )
 
     spark = build_session(
         app_name="dedup-store-compact",
@@ -123,7 +123,7 @@ def compact_main(argv: list[str] | None = None) -> int:
         shuffle_partitions=args.shuffle_partitions,
     )
     spark.sparkContext.setLogLevel("WARN")
-    stats = compact_band_store(spark, args.store)
+    stats = compact_signature_log(spark, args.store)
     print(json.dumps(stats), flush=True)
     spark.stop()
     return 0

@@ -7,12 +7,12 @@
 * orphan_signatures re-expresses the phase-1 cleanup walk
   (py_image_dedup/library/deduplicator.py:155-211, J2): signature rows
   whose url no longer exists in the live pages snapshot.
-* merge_signatures is the delete-then-insert upsert
-  (elasticsearchstorebackend.py:142-145, S7) as a DataFrame union-dedupe;
-  on a real deployment this is an Iceberg MERGE INTO keyed on url.
+The S7 upsert (elasticsearchstorebackend.py:142-145) lives with the
+stream: its append-only signature log read through latest_signatures
+(streaming/incremental.py), or an Iceberg MERGE (sources/iceberg.py).
 
-All three are single anti-join / union plans — no UDFs, no shuffling of
-text payloads (keys only).
+fresh_pages and orphan_signatures are single anti-join plans — no UDFs,
+no shuffling of text payloads (keys only).
 """
 
 from __future__ import annotations
@@ -52,10 +52,3 @@ def repair_duplicate_rows(signatures: DataFrame) -> DataFrame:
         .select("url", *[F.col(f"_r.{c}").alias(c) for c in others])
     )
 
-
-def merge_signatures(existing: DataFrame, updates: DataFrame) -> DataFrame:
-    """Upsert semantics: updates win on url collision; orphans must be
-    removed separately (orphan_signatures). Columns are aligned by name."""
-    cols = existing.columns
-    keep_old = existing.join(updates.select("url"), "url", "left_anti")
-    return keep_old.select(*cols).unionByName(updates.select(*cols))

@@ -53,11 +53,11 @@ def band_join(bands: DataFrame, cfg: DedupConfig,
 
     `bands` (url, band_id, band_hash) are the NEW docs' band rows. `store`,
     same columns, holds band rows of docs whose pairs were emitted before
-    (the stream's band store, pruned to the buckets the new docs touch; it
-    must not hold any url of `bands`). Store rows count toward bucket sizes
-    but only ever join as the B side, so every pair has at least one new
-    side: O(new x bucket) work per bucket, not O(bucket^2). Batch passes no
-    store and gets the plain self-join.
+    (the stream's stored signatures, banded and cut to the buckets the new
+    docs touch; it must not hold any url of `bands`). Store rows count
+    toward bucket sizes but only ever join as the B side, so every pair
+    has at least one new side: O(new x bucket) work per bucket, not
+    O(bucket^2). Batch passes no store and gets the plain self-join.
 
     The join shuffles COMPACT 8-byte uids, not ~60-byte url strings — at
     32-48 band rows per doc that cuts band-table and pair-agg shuffle bytes
@@ -103,7 +103,7 @@ def band_join(bands: DataFrame, cfg: DedupConfig,
     # never a pair), so count(uid) cannot fold to count(*): the size
     # aggregate then reads every column the join does and column pruning
     # cannot split the two onto separate exchanges (for the stream that
-    # would scan the band store twice). Buckets without a new doc make no
+    # would read its store rows twice). Buckets without a new doc make no
     # pairs and drop here. The SMJ hint keeps the join-back a sort-merge
     # that streams a bucket row-by-row. (A window count over
     # partitionBy(keys) buffers a whole bucket per window task — the hot
@@ -224,7 +224,9 @@ def minhash_signatures(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
 #   stream, micro-batch of 105 pages against a store of that size
 #     (trigger s, median of 5 per tier, tiers alternating): 24k 2.5 vs
 #     4.7; 250k 2.9 vs 4.6; 500k 3.8 vs 5.8; 1M 4.6 vs 6.1; 1.5M 7.1 vs
-#     9.5; 2M 7.0 vs 9.1.
+#     9.5; 2M 7.0 vs 9.1 — with a band store beside the sig log. With
+#     the sig log as the one store (median of batches 2-6, one process
+#     per tier): 1M 1.5 vs 3.5; 1.5M 1.8 vs 4.0; 2M 2.1 vs 4.9.
 # No crossover was found up to 2M on either path. The cut at half of that
 # is a conservative choice, not a measured bound: the time and memory of
 # one task above 2M, and whether more cores move the crossover (they
@@ -239,24 +241,23 @@ def single_task_tier(band_rows: int | None) -> bool:
     return band_rows is not None and band_rows <= SINGLE_TASK_BAND_ROWS
 
 
-def single_task_pairs(new_sigs: DataFrame, cfg: DedupConfig,
-                      store_sigs: DataFrame | None = None,
+def single_task_pairs(sigs: DataFrame, cfg: DedupConfig,
                       stats: dict | None = None,
                       full_band: bool = False) -> DataFrame:
-    """band_join + verify_pairs in ONE task: every signature row, tagged
-    new or store, flows through coalesce(1) into the NumPy kernel
-    functions/band_pairs.py, which buckets, caps, enumerates, scores and
-    verifies in place. Same contract and rows as the distributed tier
-    (url_a, url_b, dist, score) — the kernel gets uid, source key and band
-    hashes from the JVM expressions that tier uses. Salting is moot
-    inside one task.
+    """band_join + verify_pairs in ONE task: every signature row flows
+    through coalesce(1) into the NumPy kernel functions/band_pairs.py,
+    which buckets, caps, enumerates, scores and verifies in place. Same
+    contract and rows as the distributed tier (url_a, url_b, dist, score)
+    — the kernel gets uid, source key and band hashes from the JVM
+    expressions that tier uses. Salting is moot inside one task.
 
-    `store_sigs` (stream only) is the store's signature view; rows whose
-    url is re-upserted in `new_sigs` drop out. `full_band` is
-    minhash_pairs' full-band short-circuit. `stats`, if given, gets
-    single_task=True now and an Observation under "observation" whose
-    hot_buckets / hot_bucket_rows / warm_buckets land when the caller's
-    one write runs (no extra job)."""
+    A boolean `new` column in `sigs` (the stream's tagged signature view)
+    marks the rows a pair must include; store rows (new = false) count
+    toward bucket sizes and join only against new ones. Without it every
+    row is new (batch). `full_band` is minhash_pairs' full-band
+    short-circuit. `stats`, if given, gets single_task=True now and an
+    Observation under "observation" whose hot_buckets / hot_bucket_rows /
+    warm_buckets land when the caller's one write runs (no extra job)."""
     from pyspark.sql import Observation
 
     from py_image_dedup_spark.functions.band_pairs import (
@@ -265,16 +266,11 @@ def single_task_pairs(new_sigs: DataFrame, cfg: DedupConfig,
         pairs_kernel,
     )
 
-    sig_cols = ("sig",) + _minhash.variant_sig_cols(new_sigs.columns, cfg)
-    rows = new_sigs.select("url", *sig_cols, F.lit(True).alias("new"))
-    if store_sigs is not None:
-        rows = rows.unionByName(
-            store_sigs.join(new_sigs.select("url"), "url", "left_anti")
-            .select("url", *sig_cols, F.lit(False).alias("new"))
-        )
+    sig_cols = ("sig",) + _minhash.variant_sig_cols(sigs.columns, cfg)
+    new = F.col("new") if "new" in sigs.columns else F.lit(True)
     src = [] if cfg.across_sources else [source_of("url", cfg).alias("src")]
-    rows = rows.where("url IS NOT NULL").select(
-        F.xxhash64("url").alias("uid"), "url", "new", *src,
+    rows = sigs.where("url IS NOT NULL").select(
+        F.xxhash64("url").alias("uid"), "url", new.alias("new"), *src,
         _minhash.band_hash_array(sig_cols, cfg).alias("bands"), *sig_cols,
     )
     out = rows.coalesce(1).mapInArrow(

@@ -29,7 +29,7 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
@@ -88,8 +88,10 @@ def _checkpointed(
 
     Row count rides on the write via observe() — no extra job, no re-read;
     a resumed stage reads it from the committed files' parquet footers. The
-    partition count comes from the committed files. Every post-write
-    action here is driver-serial at any cluster size, so it must stay O(1).
+    partition count comes from the committed files. A fresh commit is read
+    back with the schema just written (no schema-inference job); a resumed
+    one infers it. Every post-write action here is driver-serial at any
+    cluster size, so it must stay O(1).
     """
     t0 = time.time()
     if resume and _done(path):
@@ -101,8 +103,6 @@ def _checkpointed(
                 {"stage": stage, "metric": "rows", "value": float(n_rows)}
             )
         return df
-    from pyspark.sql import Observation
-
     built = build()
     explain_dir = os.environ.get("PIPELINE_EXPLAIN_DIR")
     if explain_dir:
@@ -117,7 +117,7 @@ def _checkpointed(
         "overwrite"
     ).parquet(path)
     n_rows = int(obs.get["rows"])
-    df = spark.read.parquet(path)
+    df = spark.read.schema(built.schema).parquet(path)
     elapsed = time.time() - t0
     n_files = sum(1 for f in os.listdir(path) if f.startswith("part-"))
     metrics.append({"stage": stage, "metric": "seconds", "value": elapsed})
@@ -488,6 +488,8 @@ def run_dedup_pipeline(
     if until_stage == "clusters":
         return _finish()
 
+    cluster_sizes: list[Observation] = []
+
     def build_actions() -> DataFrame:
         # the clusters stage already fanned out every policy input column;
         # this stage is one window shuffle, zero joins
@@ -511,7 +513,23 @@ def run_dedup_pipeline(
             .when(F.col("rank") > best_in_content, F.lit("exact"))
             .otherwise(F.lit("near"))
         )
-        return sel.withColumn("tier", tier).select(
+        # Cluster-size skew report (same spirit as hot_bucket_rows): the
+        # select window's wall-clock floor is the largest single cluster —
+        # surface max/p99 member counts so a 100-TB run sees the straggler
+        # coming. Member counts come from a window over the cluster_id
+        # partitioning the select window already has, one row per cluster
+        # (rank 1) feeds the p99, and both ride an Observation on the
+        # stage's one write: no extra job.
+        sel = sel.withColumn(
+            "n", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
+        )
+        cluster_sizes.append(Observation())
+        return sel.observe(
+            cluster_sizes[0],
+            F.max("n").alias("max_cluster_rows"),
+            F.expr("percentile_approx(if(rank = 1, n, NULL), 0.99)")
+            .alias("p99_cluster_rows"),
+        ).withColumn("tier", tier).select(
             "url", "cluster_id", "rank", "keep_url", "action", "tier"
         )
 
@@ -519,27 +537,11 @@ def run_dedup_pipeline(
         spark, p("actions"), resume, build_actions, metrics, "actions"
     )
     results["actions"] = actions
-    # Cluster-size skew report (same spirit as hot_bucket_rows): the
-    # select window's wall-clock floor is the largest single cluster —
-    # surface max/p99 member counts so a 100-TB run sees the straggler
-    # coming. One tiny job over the checkpointed actions (count per
-    # int64 cluster_id is map-side combined; the agg output is 1 row).
-    sizes = (
-        actions.groupBy("cluster_id").count()
-        .agg(
-            F.max("count").alias("mx"),
-            F.expr("percentile_approx(count, 0.99)").alias("p99"),
-        )
-        .first()
-    )
-    metrics.append(
-        {"stage": "actions", "metric": "max_cluster_rows",
-         "value": float(sizes["mx"] or 0)}
-    )
-    metrics.append(
-        {"stage": "actions", "metric": "p99_cluster_rows",
-         "value": float(sizes["p99"] or 0)}
-    )
+    if cluster_sizes:  # built, not resumed
+        for k, v in cluster_sizes[0].get.items():
+            metrics.append(
+                {"stage": "actions", "metric": k, "value": float(v or 0)}
+            )
     return _finish()
 
 
@@ -549,12 +551,16 @@ def _write_metrics(
     # lineage: which app produced which stage commit, under what config —
     # the per-stage provenance record the resume seam pairs with
     app_id = spark.sparkContext.applicationId
-    metrics_df = spark.createDataFrame(
-        [
-            (m["stage"], m["metric"], m["value"], app_id, cfg.mode)
-            for m in metrics
-        ],
-        "stage string, metric string, value double, app_id string, mode string",
+    # rows built JVM-side from literals: a Python-side createDataFrame
+    # pickles them and starts Python workers for a few dozen rows
+    rows = F.array(*[
+        F.struct(F.lit(m["stage"]), F.lit(m["metric"]),
+                 F.lit(float(m["value"])))
+        for m in metrics
+    ]).cast("array<struct<stage: string, metric: string, value: double>>")
+    metrics_df = spark.range(1, numPartitions=1).select(
+        F.inline(rows), F.lit(app_id).alias("app_id"),
+        F.lit(cfg.mode).alias("mode"),
     )
     if not cfg.dry_run:
         metrics_df.write.mode("overwrite").parquet(path)

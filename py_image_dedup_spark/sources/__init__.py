@@ -18,3 +18,12 @@ def parquet_rows(path: str) -> int | None:
         )
     except (OSError, ValueError):  # a file vanished or is not parquet
         return None
+
+
+def parquet_columns(path: str) -> list[str] | None:
+    """Column names of a parquet directory, read from ONE file footer
+    (driver-side, no Spark job); None when it holds no parquet file."""
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return pq.read_schema(files[0]).names if files else None

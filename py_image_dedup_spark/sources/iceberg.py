@@ -15,8 +15,8 @@ through these builders:
 
 `upsert_signatures` executes the MERGE when an Iceberg catalog is actually
 on the classpath and returns True; callers fall back to the parquet
-union-dedupe (operators/incremental.py:merge_signatures) when it returns
-False. SQL builders are pure functions — unit-tested without a cluster.
+append log + latest_signatures view (streaming/incremental.py) when it
+returns False. SQL builders are pure functions — unit-tested without a cluster.
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ def create_signatures_ddl(table: str, bucket_count: int = 256) -> str:
 
 def merge_signatures_sql(table: str, updates_view: str) -> str:
     """S7 upsert: updates win on url collision — MERGE keyed on url, the
-    exact semantics merge_signatures() emulates with union-dedupe."""
+    exact semantics latest_signatures() gives the parquet append log."""
     return (
         f"MERGE INTO {table} t USING {updates_view} u ON t.url = u.url "
         "WHEN MATCHED THEN UPDATE SET * "

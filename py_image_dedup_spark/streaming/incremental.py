@@ -14,10 +14,12 @@ processing-time trigger interval; exact event-time parity would use
 session_window(ts, '30 seconds') which is provided by session_windows()
 for event tables.
 
-incremental_pairs is deliberately *restricted re-dedup*: new signatures are
-merged into the store, then the batch pipeline's band join runs only for
-buckets touched by the new docs — the micro-batch analog of the reference
-re-running find_duplicates for just the drained queue items
+incremental_pairs is deliberately *restricted re-dedup*: each micro-batch
+appends its signatures to the one store (an append-only signature log),
+then the batch pipeline's pair step runs over the log's current view with
+the new docs tagged, so a pair needs at least one new doc — the
+micro-batch analog of the reference re-running find_duplicates for just
+the drained queue items against its one index
 (processing_manager.py:100-136).
 """
 
@@ -25,7 +27,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
@@ -33,7 +35,6 @@ from py_image_dedup_spark.operators.exact import (
     elect_representatives_mapside,
     with_content_hash,
 )
-from py_image_dedup_spark.operators.incremental import merge_signatures
 from py_image_dedup_spark.operators.lsh import explode_bands, verify_pairs
 from py_image_dedup_spark.operators.modes import (
     band_join,
@@ -41,7 +42,7 @@ from py_image_dedup_spark.operators.modes import (
     single_task_pairs,
     single_task_tier,
 )
-from py_image_dedup_spark.sources import parquet_rows
+from py_image_dedup_spark.sources import parquet_columns, parquet_rows
 
 
 def _require_variant_cols(store_columns, cfg: DedupConfig) -> None:
@@ -77,50 +78,43 @@ def new_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def incremental_pairs(
-    new_sigs: DataFrame,
-    store_sigs: DataFrame | None,
-    store_bands: DataFrame | None,
+    sigs: DataFrame,
     cfg: DedupConfig,
     band_rows: int | None = None,
 ) -> DataFrame:
     """The one micro-batch step: verified pairs (url_a, url_b, dist, score)
-    with at least one side in `new_sigs` — existing-vs-existing pairs were
-    already emitted by earlier batches. This is the band-restricted
-    re-query of processing_manager.py:100-136.
+    with at least one new side — existing-vs-existing pairs were already
+    emitted by earlier batches. This is the band-restricted re-query of
+    processing_manager.py:100-136.
 
-    `store_sigs` is the store's current signature view before this batch
-    and `store_bands` its band rows (url, band_id, band_hash), possibly
-    already pruned; both None for an empty store.
+    `sigs` is the store's current signature view (latest_signatures over
+    the log, this batch appended) with a boolean `new` column marking this
+    batch's rows; a re-upserted url is one row, tagged new.
 
     Two tiers, one semantic (batch's minhash_pairs has the same two):
       band_rows known and <= modes.SINGLE_TASK_BAND_ROWS
-          single_task_pairs: the new rows and the store view minus
-          re-upserted urls go through one NumPy task; `store_bands` is
-          not read (it may be None).
+          single_task_pairs over the tagged view, in one NumPy task.
       otherwise
-          store bands are cut to the buckets the new docs touch and drop
-          re-upserted urls, then join as the store side of the batch
-          pipeline's band join (operators/modes.py:band_join), so the
-          stream gets the same bucket cap and salting as batch.
-          Verification is batch's uid-keyed verify_pairs against the
-          store view with this batch's signatures upserted.
-    `band_rows` counts new plus store band rows; an upper bound will do.
+          the store rows' bands, cut to the buckets the new docs touch,
+          join as the store side of the batch pipeline's band join
+          (operators/modes.py:band_join), so the stream gets the same
+          bucket cap and salting as batch. Verification is batch's
+          uid-keyed verify_pairs against the same view.
+    `band_rows` counts the view's band rows; an upper bound will do.
     """
-    if store_sigs is not None:
-        # fail BEFORE the caller appends a mixed-schema file to the log
-        _require_variant_cols(store_sigs.columns, cfg)
+    # variant columns cfg asks for but the store never wrote: fail loudly
+    # rather than dedup without them
+    _require_variant_cols(sigs.columns, cfg)
     if single_task_tier(band_rows):
-        return single_task_pairs(new_sigs, cfg, store_sigs=store_sigs)
+        return single_task_pairs(sigs, cfg)
     sig_cols = ("sig", *(f"sig_v_{n}" for n in cfg.norm_variants))
-    new_bands = explode_bands(new_sigs, cfg)
-    sigs = new_sigs.select("url", *sig_cols)
-    store = None
-    if store_sigs is not None:
-        sigs = merge_signatures(store_sigs.select("url", *sig_cols), sigs)
-        keys = ["band_id", "band_hash"]
-        store = store_bands.join(
-            F.broadcast(new_bands.select(*keys)), keys, "left_semi"
-        ).join(F.broadcast(new_sigs.select("url")), "url", "left_anti")
+    # computed once for its three readers below, and a plan leaf
+    sigs = sigs.localCheckpoint(eager=False)
+    new_bands = explode_bands(sigs.where("new"), cfg)
+    keys = ["band_id", "band_hash"]
+    store = explode_bands(sigs.where("NOT new"), cfg).join(
+        F.broadcast(new_bands.select(*keys)), keys, "left_semi"
+    )
     pairs = band_join(new_bands, cfg, store=store)
     return verify_pairs(pairs, sigs, cfg, sig_cols=sig_cols)
 
@@ -209,68 +203,36 @@ def latest_signatures(sig_log: DataFrame) -> DataFrame:
     )
 
 
-def compact_band_store(
-    spark: SparkSession, store_path: str, n_band_partitions: int = 64
-) -> dict:
-    """Maintenance job bounding the append-only store's read amplification:
-    rewrite `sigs` keeping only the latest row per url, and `bands` keeping
-    only rows whose (url, batch_id) is still current — the rows every
-    future micro-batch's superseded-filter would discard at read time
-    anyway (run_incremental_stream's left_semi on latest_signatures). After
-    compaction each scan reads O(live) bytes no matter how many re-upsert
-    batches a long-running daemon has appended.
+def compact_signature_log(spark: SparkSession, store_path: str) -> dict:
+    """Maintenance job bounding the append-only signature log's read
+    amplification: rewrite `sigs` keeping only the latest row per url —
+    the rows latest_signatures keeps anyway. After compaction each
+    micro-batch's view reads O(live) rows no matter how many re-upsert
+    batches a long-running daemon has appended, and the log's footer row
+    count, which picks the pairs tier, is the live count again.
 
     MUST NOT run concurrently with an active micro-batch (call it while
     the StreamingQuery is stopped, or from a maintenance window between
     triggers): the swap is a directory rename, not a transaction. On a
     cluster this whole function is Iceberg `rewrite_data_files` /
-    `expire_snapshots` and the caveat disappears. Returns per-table
+    `expire_snapshots` and the caveat disappears. Returns the log's
     before/after row counts.
     """
     import shutil
 
     sig_path = os.path.join(store_path, "sigs")
-    bands_path = os.path.join(store_path, "bands")
     sig_log = spark.read.parquet(sig_path)
-    current = latest_signatures(sig_log)
     stats = {"sigs_before": sig_log.count()}
-
-    # Write EVERY compacted table to a tmp dir before swapping ANY source
-    # dir: a DataFrame's file index is captured at read time, so swapping
-    # `sigs` first would leave the bands join scanning deleted files.
     sig_tmp = sig_path + "__compact_tmp"
-    current.select(*sig_log.columns).write.mode("overwrite").parquet(sig_tmp)
-    # re-read from the stable tmp copy for the bands join
-    current_c = spark.read.parquet(sig_tmp)
-
-    def _swap(tmp, path):
-        old = path + "__compact_old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-
-    bands_tmp = None
-    if os.path.exists(bands_path):
-        bands = spark.read.parquet(bands_path)
-        stats["bands_before"] = bands.count()
-        live = bands.join(
-            current_c.select("url", "batch_id"), ["url", "batch_id"],
-            "left_semi",
-        )
-        bands_tmp = bands_path + "__compact_tmp"
-        (
-            live.select("url", "band_id", "band_hash", "batch_id", "band_pfx")
-            .write.mode("overwrite")
-            .partitionBy("band_pfx")
-            .parquet(bands_tmp)
-        )
-
-    _swap(sig_tmp, sig_path)
+    latest_signatures(sig_log).select(*sig_log.columns).write.mode(
+        "overwrite"
+    ).parquet(sig_tmp)
+    old = sig_path + "__compact_old"
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(sig_path, old)
+    os.rename(sig_tmp, sig_path)
+    shutil.rmtree(old)
     stats["sigs_after"] = spark.read.parquet(sig_path).count()
-    if bands_tmp is not None:
-        _swap(bands_tmp, bands_path)
-        stats["bands_after"] = spark.read.parquet(bands_path).count()
     return stats
 
 
@@ -400,44 +362,47 @@ def run_incremental_stream(
     under input_path = the watchdog watch dir). Returns the StreamingQuery.
 
     Each micro-batch keeps the latest row per url, signs one exact-dup
-    representative per content hash (new_signatures), then runs the one
-    micro-batch step, incremental_pairs, in one of batch's two tiers:
-      single-task   while new + store band rows (the store side bounded by
-                    the sig log's parquet-footer row count, no job) fit
-                    modes.SINGLE_TASK_BAND_ROWS: the new signatures and the
-                    store's current signature view go through one NumPy
-                    task (operators/modes.py:single_task_pairs); the band
-                    store is not read. This step reads and re-bands the
-                    whole signature view, O(store), and still beat the
-                    distributed tier at every store size measured, up to
-                    2M band rows (see the constant's comment)
-      distributed   otherwise: the new docs' band rows plus the pruned
-                    store band rows go through the batch pipeline's capped,
-                    salted band join (operators/modes.py:band_join) and
-                    batch's uid-keyed verify_pairs.
+    representative per content hash (new_signatures) and makes two writes
+    over one store:
+      1. append the new signatures to the sig log. An Observation on that
+         write counts them (an empty batch stops here), and the log's
+         parquet footers then bound the view's band rows with no job.
+      2. read the log back (schema as just written), take its
+         latest_signatures view with new = (batch_id == this batch), run
+         the one micro-batch step, incremental_pairs, on it and append the
+         verified pairs. The step takes one of batch's two tiers:
+           single-task   while that bound fits modes.SINGLE_TASK_BAND_ROWS:
+                         the whole tagged view goes through one NumPy task
+                         (operators/modes.py:single_task_pairs)
+           distributed   otherwise: the store rows' bands, cut to the
+                         buckets the new docs touch, are the store side of
+                         the batch pipeline's capped, salted band join
+                         (operators/modes.py:band_join), verified with
+                         batch's uid-keyed verify_pairs against the view.
     For the same input the stream therefore emits the batch pipeline's
     pairs, hot-bucket cap included, as long as a bucket that ends over
     bucket_cap is already over it when its first pair would form: a pair
-    emitted while its bucket was under the cap stays emitted. The band
-    store, the sig log and scan_metrics are appended on every batch in
-    either tier.
+    emitted while its bucket was under the cap stays emitted.
+
+    A batch replayed after a crash between the two writes appends its
+    signatures a second time; latest_signatures folds the copies (same
+    url, same batch_id), so the replay emits the same pairs.
 
     Storage layout — all APPEND-only, so no micro-batch ever deletes files
     another plan still references, and per-batch write cost is O(batch):
 
-      store_path/sigs    (url, content_hash, sig, batch_id) signature LOG;
-                         current view = latest_signatures() (latest batch
-                         wins per url — the upsert/S7 semantics)
-      store_path/bands   (url, band_id, band_hash, batch_id) partitioned
-                         by band_pfx = pmod(band_hash, n_band_partitions):
-                         the per-batch "which stored docs share a bucket
-                         with the new docs" lookup reads ONLY the
-                         partitions holding touched buckets (partition
-                         pruning at scan time), not the whole store
+      store_path/sigs    (url, content_hash, sig[, sig_v_*], batch_id)
+                         signature LOG, the one store; current view =
+                         latest_signatures() (latest batch wins per url —
+                         the upsert/S7 semantics). compact_signature_log
+                         rewrites it to the view.
       store_path/scan_metrics
-                         one row per micro-batch: touched vs total band
-                         partitions, and whether the band store was
-                         scanned (only the distributed tier reads it)
+                         one row per micro-batch (batch_id,
+                         touched_band_partitions, total_band_partitions,
+                         store_scanned), kept for its readers: no band
+                         store is written or read, so touched is 0,
+                         store_scanned false and the total is
+                         `n_band_partitions`, which sets nothing else.
       pairs_path         verified pairs, appended per batch
 
     Each pair is emitted exactly once across batches (a pair needs >=1 new
@@ -446,7 +411,7 @@ def run_incremental_stream(
     daemon, processing_manager.py:100-136).
     """
     sig_path = os.path.join(store_path, "sigs")
-    bands_path = os.path.join(store_path, "bands")
+    scan_path = os.path.join(store_path, "scan_metrics")
     n_bands = cfg.lsh_bands * (1 + len(cfg.norm_variants))
 
     if metrics_path is not None:
@@ -466,87 +431,38 @@ def run_incremental_stream(
             .agg(F.max_by(F.struct(*cols), F.col("warc_ts")).alias("_r"))
             .select("url", *[F.col(f"_r.{c}").alias(c) for c in cols])
         )
-        new_sigs = (
-            new_signatures(batch, cfg)
-            .withColumn("batch_id", F.lit(batch_id))
-            .localCheckpoint(eager=True)  # hash once, every consumer below
-        )
-        new_bands = explode_bands(new_sigs, cfg).withColumn(
+        new_sigs = new_signatures(batch, cfg).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        # one job yields the touched band partitions and, riding along,
-        # the new docs' band-row count for the tier choice
-        per_pfx = (
-            new_bands.groupBy(
-                F.pmod("band_hash", F.lit(n_band_partitions)).alias("p")
-            )
-            .count()
-            .collect()
+        log_cols = parquet_columns(sig_path)
+        if log_cols is not None:
+            # fail BEFORE this batch appends a mixed-schema file to the log
+            _require_variant_cols(log_cols, cfg)
+        appended = Observation()
+        (
+            new_sigs.observe(appended, F.count(F.lit(1)).alias("rows"))
+            .write.mode("append").parquet(sig_path)
         )
-        if not per_pfx:  # empty micro-batch
+        if not appended.get["rows"]:  # empty micro-batch
             return
-        touched_pfx = [r[0] for r in per_pfx]
-        band_rows = sum(r[1] for r in per_pfx)
-
-        store_sigs = store_bands = None
-        if os.path.exists(os.path.join(sig_path, "_SUCCESS")):
-            store_sigs = latest_signatures(spark.read.parquet(sig_path))
-            # the log's parquet-footer row count bounds the current view
-            # from above (no job); every signature row has n_bands bands
-            log_rows = parquet_rows(sig_path)
-            band_rows = (
-                None if log_rows is None else band_rows + log_rows * n_bands
-            )
-            if not single_task_tier(band_rows):
-                # computed once for both readers below (the superseded-row
-                # filter and verification), and a plan leaf for the join
-                store_sigs = store_sigs.localCheckpoint(eager=False)
-                # partition-pruned scan: only band_pfx partitions that
-                # contain a touched bucket are read; rows superseded by a
-                # later re-upsert of the same url are dropped
-                store_bands = (
-                    spark.read.parquet(bands_path)
-                    .where(F.col("band_pfx").isin(touched_pfx))
-                    .join(
-                        store_sigs.select("url", "batch_id"),
-                        ["url", "batch_id"],
-                        "left_semi",
-                    )
-                )
-        verified = incremental_pairs(new_sigs, store_sigs, store_bands, cfg,
-                                     band_rows=band_rows)
-
-        # appends only — nothing a concurrent or later plan reads is deleted
-        verified.write.mode("append").parquet(pairs_path)
-        new_sigs.write.mode("append").parquet(sig_path)
-        # Pruning-selectivity metric (VERDICT r4 item 6): the T7 path's
-        # 100x-scale assumption is touched buckets << store, i.e. the
-        # band-store scan reads only the band_pfx partitions a new batch
-        # touches. Record scanned-vs-total partitions per micro-batch so
-        # that selectivity is OBSERVABLE (touched == total on a batch means
-        # the store scan degenerated to a full read — resize
-        # n_band_partitions). Cheap by construction: touched_pfx is already
-        # collected for the pruned scan; total is the layout constant. A
-        # batch that reads no band store (empty store, single-task tier)
-        # records store_scanned=False and 0 touched partitions.
-        # (one JVM-side row: a Python-side createDataFrame would start
-        # Python workers for a single row)
-        scanned = store_bands is not None
+        # the log's footer row count bounds the view from above (no job);
+        # every signature row has n_bands bands
+        log_rows = parquet_rows(sig_path)
+        band_rows = None if log_rows is None else log_rows * n_bands
+        view = latest_signatures(
+            spark.read.schema(new_sigs.schema).parquet(sig_path)
+        ).withColumn("new", F.col("batch_id") == batch_id)
+        incremental_pairs(view, cfg, band_rows=band_rows).write.mode(
+            "append"
+        ).parquet(pairs_path)
+        # one JVM-side row: a Python-side createDataFrame would start
+        # Python workers for a single row
         spark.range(1, numPartitions=1).select(
             F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(len(touched_pfx) if scanned else 0)
-            .alias("touched_band_partitions"),
+            F.lit(0).alias("touched_band_partitions"),
             F.lit(n_band_partitions).alias("total_band_partitions"),
-            F.lit(scanned).alias("store_scanned"),
-        ).write.mode("append").parquet(os.path.join(store_path, "scan_metrics"))
-        (
-            new_bands.withColumn(
-                "band_pfx", F.pmod("band_hash", F.lit(n_band_partitions))
-            )
-            .write.mode("append")
-            .partitionBy("band_pfx")
-            .parquet(bands_path)
-        )
+            F.lit(False).alias("store_scanned"),
+        ).write.mode("append").parquet(scan_path)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", store_path + "_ckpt"

@@ -11,16 +11,13 @@ from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.operators.incremental import (
     DATAMODEL_VERSION,
     fresh_pages,
-    merge_signatures,
     orphan_signatures,
 )
-from py_image_dedup_spark.operators.lsh import (
-    explode_bands,
-    lsh_candidate_pipeline,
-)
+from py_image_dedup_spark.operators.lsh import lsh_candidate_pipeline
 from py_image_dedup_spark.sources.pages import generate_pages
 from py_image_dedup_spark.streaming.incremental import (
     incremental_pairs,
+    latest_signatures,
     new_signatures,
     session_windows,
 )
@@ -61,21 +58,6 @@ def test_orphan_signatures(spark):
     assert got == {"gone"}
 
 
-def test_merge_signatures_upsert(spark):
-    schema = "url string, content_hash string, sig array<int>"
-    old = spark.createDataFrame(
-        [("u1", "h1", [1]), ("u2", "h2", [2])], schema
-    )
-    upd = spark.createDataFrame(
-        [("u2", "h2b", [22]), ("u3", "h3", [3])], schema
-    )
-    got = {
-        r["url"]: r["content_hash"]
-        for r in merge_signatures(old, upd).collect()
-    }
-    assert got == {"u1": "h1", "u2": "h2b", "u3": "h3"}
-
-
 def test_incremental_batch_matches_full_rerun(spark):
     """Adding a batch of pages incrementally finds exactly the new pairs a
     full re-run would find (restricted to pairs touching new urls)."""
@@ -87,8 +69,12 @@ def test_incremental_batch_matches_full_rerun(spark):
     # cached: the step's plan reads each side several times
     store0 = new_signatures(first, cfg).cache()
     new_sigs = new_signatures(second, cfg).cache()
+    # the stream's view: store log batch 0, this batch 1, tagged new
+    log = store0.withColumn("batch_id", F.lit(0)).unionByName(
+        new_sigs.withColumn("batch_id", F.lit(1))
+    )
     new_pairs = incremental_pairs(
-        new_sigs, store0, explode_bands(store0, cfg), cfg
+        latest_signatures(log).withColumn("new", F.col("batch_id") == 1), cfg
     )
     got = {
         (r["url_a"], r["url_b"]) for r in new_pairs.collect()
@@ -108,10 +94,7 @@ def test_incremental_batch_matches_full_rerun(spark):
     }
     # incremental works on exact-dedup representatives; map both to rep space
     # by checking set equality on pairs whose BOTH members are reps
-    store_urls = {
-        r["url"] for r in merge_signatures(store0, new_sigs).select("url")
-        .collect()
-    }
+    store_urls = {r["url"] for r in log.select("url").collect()}
     expected_rep = {
         (a, b) for a, b in expected if a in store_urls and b in store_urls
     }

@@ -93,9 +93,9 @@ def test_streaming_incremental_honors_variants(spark):
     """The streaming micro-batch step must catch the same punct-mangled
     near-dup batch mode catches when norm_variants is on (ADVICE r5: it
     previously computed canonical-only signatures and silently missed)."""
-    from py_image_dedup_spark.operators.lsh import explode_bands
     from py_image_dedup_spark.streaming.incremental import (
         incremental_pairs,
+        latest_signatures,
         new_signatures,
     )
 
@@ -107,11 +107,15 @@ def test_streaming_incremental_honors_variants(spark):
     second = spark.createDataFrame(
         [("mangled", docs["mangled"])], "url string, text string"
     )
-    store0 = new_signatures(first, CFG_ON)
+    log = new_signatures(first, CFG_ON).withColumn(
+        "batch_id", F.lit(0)
+    ).unionByName(
+        new_signatures(second, CFG_ON).withColumn("batch_id", F.lit(1))
+    )
 
     new_pairs = incremental_pairs(
-        new_signatures(second, CFG_ON), store0,
-        explode_bands(store0, CFG_ON), CFG_ON,
+        latest_signatures(log).withColumn("new", F.col("batch_id") == 1),
+        CFG_ON,
     )
     got = {(r["url_a"], r["url_b"]): r["dist"] for r in new_pairs.collect()}
     assert ("clean", "mangled") in got
@@ -123,9 +127,9 @@ def test_streaming_store_without_variants_raises(spark):
     """A canonical-only signature store with norm_variants requested must
     fail loudly, not silently dedup without the variants (and not append a
     mixed-schema file to the store log)."""
-    from py_image_dedup_spark.operators.lsh import explode_bands
     from py_image_dedup_spark.streaming.incremental import (
         incremental_pairs,
+        latest_signatures,
         new_signatures,
     )
 
@@ -136,11 +140,16 @@ def test_streaming_store_without_variants_raises(spark):
     second = spark.createDataFrame(
         [("mangled", docs["mangled"])], "url string, text string"
     )
-    store0 = new_signatures(first, CFG_OFF)
+    # the view of a canonical-only log: no sig_v_* column to verify on
+    log = new_signatures(first, CFG_OFF).withColumn(
+        "batch_id", F.lit(0)
+    ).unionByName(
+        new_signatures(second, CFG_OFF).withColumn("batch_id", F.lit(1))
+    )
     try:
         incremental_pairs(
-            new_signatures(second, CFG_ON), store0,
-            explode_bands(store0, CFG_OFF), CFG_ON,
+            latest_signatures(log).withColumn("new", F.col("batch_id") == 1),
+            CFG_ON,
         )
         raise AssertionError("expected ValueError")
     except ValueError as e:

@@ -2,9 +2,9 @@
 distributed band_join + verify_pairs, and single_task_pairs, one NumPy task
 (operators/modes.py). Both tiers must emit identical rows — (url_a, url_b,
 dist, score), duplicates and full-band short-circuit included — for batch
-(minhash_pairs) and for the stream step (incremental_pairs, whose store side
-here holds re-upserted urls), on four configs. Tests pick a tier by
-patching modes.SINGLE_TASK_BAND_ROWS."""
+(minhash_pairs) and for the stream step (incremental_pairs over the tagged
+signature view, whose new rows here re-upsert stored urls), on four
+configs. Tests pick a tier by patching modes.SINGLE_TASK_BAND_ROWS."""
 
 from __future__ import annotations
 
@@ -13,10 +13,11 @@ from pyspark.sql import functions as F
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.operators import modes
 from py_image_dedup_spark.operators.exact import with_content_hash
-from py_image_dedup_spark.operators.lsh import compute_signatures, explode_bands
+from py_image_dedup_spark.operators.lsh import compute_signatures
 from py_image_dedup_spark.sources.pages import generate_pages
 from py_image_dedup_spark.streaming.incremental import (
     incremental_pairs,
+    latest_signatures,
     new_signatures,
 )
 
@@ -40,6 +41,11 @@ def use_tier(monkeypatch, single_task: bool) -> None:
 
 def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
+
+
+def _view(log):
+    """The stream's tagged view of a sig log whose last batch is 1."""
+    return latest_signatures(log).withColumn("new", F.col("batch_id") == 1)
 
 
 def _boiler(spark, lo: int, hi: int):
@@ -93,21 +99,24 @@ def test_single_task_tier_equals_distributed(spark, monkeypatch):
     batch = modes.minhash_signatures(
         with_content_hash(first.unionByName(second)), vcfg
     ).drop("norm_text").localCheckpoint()
-    # stream step: store = wave 1, new = wave 2 (incl. the re-upserts)
-    store = new_signatures(first, vcfg).localCheckpoint()
-    new = new_signatures(second, vcfg).localCheckpoint()
+    # stream step: log batch 0 = wave 1, batch 1 = wave 2 (incl. the
+    # re-upserts)
+    log = new_signatures(first, vcfg).withColumn(
+        "batch_id", F.lit(0)
+    ).unionByName(
+        new_signatures(second, vcfg).withColumn("batch_id", F.lit(1))
+    ).localCheckpoint()
     n = batch.count()
 
     for name, cfg in CONFIGS.items():
         drop = [] if cfg.norm_variants else ["sig_v_strip_punct"]
-        b, st, nw = (df.drop(*drop) for df in (batch, store, new))
+        b, lg = (df.drop(*drop) for df in (batch, log))
         got = {}
         for single in (True, False):
             use_tier(monkeypatch, single)
             got[single] = (
                 _rows(modes.minhash_pairs(b, cfg, known_rows=n)),
-                _rows(incremental_pairs(nw, st, explode_bands(st, cfg), cfg,
-                                        band_rows=0)),
+                _rows(incremental_pairs(_view(lg), cfg, band_rows=0)),
             )
         assert got[True][0] and got[True][1], f"{name}: no pairs"
         assert got[True] == got[False], name
@@ -131,3 +140,31 @@ def test_single_task_hot_bucket_cap_excludes_mega_buckets(spark):
         "hot_bucket_rows": 12 * cfg.lsh_bands,
         "warm_buckets": 0,
     }
+
+
+def test_replayed_sig_append_emits_same_pairs(spark, monkeypatch, tmp_path):
+    """A micro-batch replayed after a crash between its sig-log append and
+    its pairs append appends its signature rows a second time. The step
+    over the log read back must emit the same pairs as after one append,
+    on both tiers — under the cap config, where counting a duplicated row
+    twice would push buckets over bucket_cap."""
+    first, second = _waves(spark)
+    cfg = CONFIGS["cap"]
+    log = str(tmp_path / "sigs")
+    new_signatures(first, cfg).withColumn("batch_id", F.lit(0)).write.parquet(
+        log
+    )
+    new = new_signatures(second, cfg).withColumn(
+        "batch_id", F.lit(1)
+    ).localCheckpoint()
+    got = {}
+    for appends in (1, 2):  # the batch's append, then its replay
+        new.write.mode("append").parquet(log)
+        view = _view(spark.read.schema(new.schema).parquet(log))
+        for single in (True, False):
+            use_tier(monkeypatch, single)
+            got[appends, single] = _rows(
+                incremental_pairs(view, cfg, band_rows=0)
+            )
+    assert got[1, True], "no pairs"
+    assert all(v == got[1, True] for v in got.values())

@@ -235,6 +235,16 @@ def test_metrics_emitted(spark, pages, ckpt):
     pairs = {r["metric"]: r["value"] for r in rows if r["stage"] == "pairs"}
     assert pairs["single_task"] == 1.0
     assert {"hot_buckets", "hot_bucket_rows", "warm_buckets"} <= set(pairs)
+    # the cluster-size report rides the actions write's Observation and
+    # equals the groupBy form over the committed actions
+    acts = {r["metric"]: r["value"] for r in rows if r["stage"] == "actions"}
+    sizes = (
+        out["actions"].groupBy("cluster_id").count()
+        .selectExpr("max(count) AS mx", "percentile_approx(count, 0.99) AS p99")
+        .first()
+    )
+    assert acts["max_cluster_rows"] == sizes["mx"] > 1
+    assert acts["p99_cluster_rows"] == sizes["p99"]
 
 
 def test_resume_invalidated_on_config_change(spark, pages, ckpt):

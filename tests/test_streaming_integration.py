@@ -5,7 +5,7 @@ with trigger(availableNow) in >=2 micro-batches (maxFilesPerTrigger=1),
 including a re-upsert of an existing url (the reference daemon's
 modified-file path, processing_manager.py:100-136). Asserts:
 
-  * the banded store layout is written (sigs log + band_pfx partitions);
+  * the store is the one sig log (plus its scan_metrics rows);
   * latest_signatures resolves the re-upserted url to its newest content;
   * streamed pair recall: every pair the batch pipeline finds over the
     final corpus is present in the appended pairs log, compared on content
@@ -121,9 +121,10 @@ def test_stream_ran_multiple_batches_and_layout(stream_run):
     sig_log = spark.read.parquet(os.path.join(stream_run["store_dir"], "sigs"))
     n_batches = sig_log.select("batch_id").distinct().count()
     assert n_batches >= 2
-    # banded store is physically partitioned by band_pfx
-    bands_dir = os.path.join(stream_run["store_dir"], "bands")
-    assert any(d.startswith("band_pfx=") for d in os.listdir(bands_dir))
+    # one store: the sig log, no band store beside it
+    assert sorted(os.listdir(stream_run["store_dir"])) == [
+        "scan_metrics", "sigs"
+    ]
 
 
 def test_per_batch_metrics_rows_emitted(stream_run):
@@ -243,103 +244,39 @@ def test_stream_pairs_equal_batch_pairs_when_cap_fires(spark, tmp_path,
         )
 
 
-def _scan_rows(spark, store_dir: str, total: int, distributed: bool):
-    """scan_metrics rows by batch id, checked for the pairs tier that ran:
-    one row per micro-batch; a batch that reads no band store (the first
-    one, or any single-task batch) records store_scanned=False and 0
-    touched partitions, a scanning batch 0 < touched <= total."""
-    sm = spark.read.parquet(os.path.join(store_dir, "scan_metrics"))
+def test_scan_metrics_rows_emitted(stream_run):
+    """One scan_metrics row per micro-batch, schema kept for its readers:
+    no band store exists, so no batch scans one or touches a partition."""
+    spark = stream_run["spark"]
+    sm = spark.read.parquet(os.path.join(stream_run["store_dir"],
+                                         "scan_metrics"))
     rows = {r["batch_id"]: r for r in sm.collect()}
     assert len(rows) >= 2
-    assert all(r["total_band_partitions"] == total for r in rows.values())
-    first = rows[min(rows)]
     for r in rows.values():
-        scanned = distributed and r is not first
-        assert r["store_scanned"] == scanned
-        if scanned:
-            assert 0 < r["touched_band_partitions"] <= total
-        else:
-            assert r["touched_band_partitions"] == 0
-    return rows
+        assert r["total_band_partitions"] == 16
+        assert r["touched_band_partitions"] == 0
+        assert not r["store_scanned"]
 
 
-def test_scan_metrics_rows_emitted(stream_run):
-    """Pruning-selectivity observability (VERDICT r4 item 6): one
-    scan_metrics row per micro-batch recording scanned-vs-total band
-    partitions. This small store takes the single-task pairs tier, which
-    reads no band store; the distributed tier's rows are checked by
-    test_store_scan_pruning_engages_on_small_batch."""
-    _scan_rows(stream_run["spark"], stream_run["store_dir"], 16,
-               distributed=False)
-
-
-def test_store_scan_pruning_engages_on_small_batch(spark, tmp_path,
-                                                   monkeypatch):
-    """A single-doc update against a wide store must NOT read the whole
-    band store: one doc carries at most lsh_bands distinct buckets, so with
-    n_band_partitions > lsh_bands the pruned scan touches a strict subset
-    of the partitions — the T7 100x-scale assumption, now asserted. Only
-    the distributed pairs tier reads the band store, so force it."""
-    from py_image_dedup_spark.operators import modes
-
-    monkeypatch.setattr(modes, "SINGLE_TASK_BAND_ROWS", -1)
-    input_dir = str(tmp_path / "in")
-    store_dir = str(tmp_path / "store")
-    pairs_dir = str(tmp_path / "pairs")
-    os.makedirs(input_dir)
-
-    pages = generate_pages(spark, 10, seed=9)
-    wave1 = pages.where(F.col("group_id") < 9)
-    wave2 = pages.where(
-        (F.col("group_id") == 9) & (F.col("variant") == "singleton")
-    ).limit(1)
-    _write_wave(wave1, os.path.join(input_dir, "wave1.parquet"))
-    _write_wave(wave2, os.path.join(input_dir, "wave2.parquet"))
-
-    cfg = DedupConfig(max_dist=0.30)
-    q = run_incremental_stream(
-        spark, input_dir, store_dir, pairs_dir, cfg,
-        available_now=True, max_files_per_trigger=1, n_band_partitions=64,
-    )
-    assert q.awaitTermination(300), "stream did not drain in time"
-
-    rows = _scan_rows(spark, store_dir, 64, distributed=True)
-    small = rows[max(rows)]
-    assert small["touched_band_partitions"] <= cfg.lsh_bands
-    assert small["touched_band_partitions"] < small["total_band_partitions"], (
-        "small-batch store scan read every band partition — pruning "
-        "did not engage"
-    )
-
-
-def test_compact_band_store_drops_superseded_rows(stream_run):
+def test_compact_signature_log_drops_superseded_rows(stream_run):
     """Compaction (the Iceberg rewrite_data_files analog) keeps the current
-    view bit-identical while physically dropping every superseded row the
-    read-side filter was discarding per scan. MUST run last in this module:
-    it rewrites the store in place."""
-    from py_image_dedup_spark.streaming.incremental import compact_band_store
+    view bit-identical while physically dropping every superseded row
+    latest_signatures was discarding per read. MUST run last in this
+    module: it rewrites the store in place."""
+    from py_image_dedup_spark.streaming.incremental import (
+        compact_signature_log,
+    )
 
     spark = stream_run["spark"]
     store = stream_run["store_dir"]
-    url = stream_run["reup_url"]
     sig_log = spark.read.parquet(os.path.join(store, "sigs"))
     before_current = {
         (r["url"], r["content_hash"], r["batch_id"])
         for r in latest_signatures(sig_log).collect()
     }
-    old_batch = (
-        sig_log.where(F.col("url") == url)
-        .agg(F.min("batch_id"))
-        .first()[0]
-    )
-    bands = spark.read.parquet(os.path.join(store, "bands"))
-    assert bands.where(
-        (F.col("url") == url) & (F.col("batch_id") == old_batch)
-    ).count() > 0, "precondition: superseded band rows exist"
 
-    stats = compact_band_store(spark, store)
+    stats = compact_signature_log(spark, store)
     assert stats["sigs_after"] < stats["sigs_before"]
-    assert stats["bands_after"] < stats["bands_before"]
 
     sig_log2 = spark.read.parquet(os.path.join(store, "sigs"))
     # exactly one row per url now, and the current view is unchanged
@@ -349,12 +286,3 @@ def test_compact_band_store_drops_superseded_rows(stream_run):
         for r in latest_signatures(sig_log2).collect()
     }
     assert after_current == before_current
-    bands2 = spark.read.parquet(os.path.join(store, "bands"))
-    assert bands2.where(
-        (F.col("url") == url) & (F.col("batch_id") == old_batch)
-    ).count() == 0
-    # physical layout preserved: still band_pfx-partitioned for pruning
-    assert any(
-        d.startswith("band_pfx=")
-        for d in os.listdir(os.path.join(store, "bands"))
-    )
