@@ -12,8 +12,12 @@ Stages:
   2 signatures   MinHash sigs for one representative per distinct content
                  (exact-dup pre-pass; SURVEY.md §7 risk 3)
   3 pairs        LSH band self-join + verification (J1)
-  4 clusters     connected components over pair edges (compact int64 uids
-                 through every round), fanned back out to all exact-dup
+  4 clusters     connected components over pair edges (compact int64
+                 uids): while the committed pair count fits one task
+                 (cc_single_task_edges), one NumPy union-find task emits
+                 rep-level cluster ids + min dist / max score, broadcast
+                 into the rep map; above it, distributed large-star/
+                 small-star rounds. Fanned back out to all exact-dup
                  members WITH the policy input columns attached (A2)
   5 actions      keep-best-copy window selection (O1-O4) — zero joins,
                  one window shuffle
@@ -34,7 +38,10 @@ from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.functions.normalize import extract_meta_udf
-from py_image_dedup_spark.operators.components import connected_components
+from py_image_dedup_spark.operators.components import (
+    connected_components,
+    single_task_components,
+)
 from py_image_dedup_spark.operators.exact import (
     elect_representatives_mapside,
     with_content_hash,
@@ -436,44 +443,50 @@ def run_dedup_pipeline(
         edges = pairs.select(
             F.xxhash64("url_a").alias("uid_a"),
             F.xxhash64("url_b").alias("uid_b"),
+            "dist", "score",
         )
-        # the pairs commit already measured its row count (or, resumed, its
-        # footers hold it) — hand it to CC so small graphs take the one-task
-        # union-find tier instead of serial star rounds (components.py)
-        rep_clusters = connected_components(
-            edges, vertices=signatures.select(F.xxhash64("url").alias("uid")),
-            src="uid_a", dst="uid_b", vertex_col="uid", stats=cc_stats,
-            known_edge_count=stage_rows("pairs"),
-            single_task_edges=cfg.cc_single_task_edges,
-        )
+        n_edges = stage_rows("pairs")
+        if n_edges is not None and n_edges <= cfg.cc_single_task_edges:
+            # the pairs commit measured its row count (or, resumed, its
+            # footers hold it) and it fits one task: one union-find emits
+            # rep-level (uid, cluster_id, dist, score) for every paired
+            # rep — no driver-serial CC rounds, no rep_dist aggregation
+            rep_info = F.broadcast(single_task_components(edges))
+            cc_stats.update(rounds=0, converged=True, single_task=True)
+        else:
+            rep_clusters = connected_components(
+                edges, src="uid_a", dst="uid_b", vertex_col="uid",
+                stats=cc_stats,
+            )
+            # Per-representative min distance / max score, aggregated at
+            # REP level (uid-keyed, rep-count-sized shuffles) before the
+            # corpus fan-out — the actions stage then needs zero joins,
+            # only its window.
+            rep_info = (
+                edges.select(F.col("uid_a").alias("uid"), "dist", "score")
+                .unionByName(
+                    edges.select(F.col("uid_b").alias("uid"), "dist", "score")
+                )
+                .groupBy("uid")
+                .agg(F.min("dist").alias("dist"),
+                     F.max("score").alias("score"))
+                .join(rep_clusters, "uid", "left")
+            )
         for k in ("rounds", "converged", "single_task"):
             metrics.append(
                 {"stage": "clusters", "metric": f"cc_{k}",
                  "value": float(cc_stats.get(k, False))}
             )
-        # Per-representative min distance / max score, aggregated at REP
-        # level (uid-keyed, rep-count-sized shuffles) before the corpus
-        # fan-out — the actions stage then needs zero joins, only its
-        # window (the old shape re-joined pages_meta + rep_map + rep_dist
-        # per action row: ~6 shuffle stages, the worst scaler in the 1->4
-        # executor protocol).
-        rep_dist = (
-            pairs.select(F.xxhash64("url_a").alias("uid"), "dist", "score")
-            .unionByName(
-                pairs.select(F.xxhash64("url_b").alias("uid"), "dist", "score")
-            )
-            .groupBy("uid")
-            .agg(F.min("dist").alias("dist"), F.max("score").alias("score"))
-        )
-        rep_info = rep_clusters.join(rep_dist, "uid", "left").select(
-            "uid", "cluster_id",
-            F.coalesce("dist", F.lit(0.0)).alias("dist"),
-            F.coalesce("score", F.lit(0.0)).alias("score"),
-        )
         rep_map = signatures.select(
             "content_hash", F.xxhash64("url").alias("uid")
         )
-        rep_level = rep_map.join(rep_info, "uid").drop("uid")
+        # reps on no edge are singletons: their own uid, dist/score 0.0
+        rep_level = rep_map.join(rep_info, "uid", "left").select(
+            "content_hash",
+            F.coalesce("cluster_id", "uid").alias("cluster_id"),
+            F.coalesce("dist", F.lit(0.0)).alias("dist"),
+            F.coalesce("score", F.lit(0.0)).alias("score"),
+        )
         # fan rep-level cluster ids + policy inputs out to every exact-dup
         # member in ONE corpus-scale join (on content_hash)
         return pages_meta.join(rep_level, "content_hash").select(

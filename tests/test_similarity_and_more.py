@@ -87,7 +87,7 @@ def test_cc_non_convergence_raises(spark):
         [(i, i + 1) for i in range(n - 1)], "url_a long, url_b long"
     ).repartition(8)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, single_task_edges=0, max_iterations=1)
+        connected_components(edges, max_iterations=1)
 
 
 def test_cc_hub_and_two_blobs(spark):
@@ -763,31 +763,6 @@ def test_cc_local_contract_equals_plain(spark):
     assert s_on["converged"] and s_off["converged"]
     # the pre-pass must not take MORE rounds than the plain path
     assert s_on["rounds"] <= s_off["rounds"]
-
-    # small-graph tier: one single-task union-find pass, zero rounds,
-    # label-identical to the distributed paths
-    stats_st: dict = {}
-    st = {
-        r["url"]: r["cluster_id"]
-        for r in connected_components(
-            df, vertices=verts, stats=stats_st,
-            known_edge_count=365, single_task_edges=1_000_000,
-        ).collect()
-    }
-    assert st == off
-    assert stats_st["single_task"] and stats_st["rounds"] == 0
-
-    # a known count ABOVE the threshold must fall back to the rounds path
-    stats_big: dict = {}
-    big = {
-        r["url"]: r["cluster_id"]
-        for r in connected_components(
-            df, vertices=verts, stats=stats_big,
-            known_edge_count=365, single_task_edges=10,
-        ).collect()
-    }
-    assert big == off
-    assert "single_task" not in stats_big
 
 
 def test_image_features_real_jpeg_decode(spark):
