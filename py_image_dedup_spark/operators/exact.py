@@ -1,4 +1,5 @@
-"""Exact deduplication: content-hash groupBy → keep-best-copy.
+"""Exact deduplication: the content-hash key and one representative per
+key.
 
 The minimum end-to-end slice (SURVEY.md §7 step 2) and, at web scale, the
 mandatory pre-pass before MinHash/LSH: identical-text mass (mirrors,
@@ -6,7 +7,7 @@ re-crawls) would otherwise form degenerate mega-buckets in every LSH band
 (SURVEY.md §7 risk 3).
 
 All JVM-side built-ins: sha2 for the content key, one shuffle for the
-window. No UDFs.
+election. No UDFs.
 """
 
 from __future__ import annotations
@@ -14,9 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.functions.normalize import normalize_text
-from py_image_dedup_spark.operators.select import select_keepers
 
 
 def with_content_hash(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -29,24 +28,6 @@ def with_content_hash(pages: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("n_bytes", F.octet_length(F.col(text_col)).cast("long"))
         .withColumn("n_chars", F.length(F.col("norm_text")).cast("long"))
     )
-
-
-def exact_duplicate_actions(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Full exact-dedup slice: hash → group (cluster_id = content_hash) →
-    policy selection → actions table (url, cluster_id, rank, keep_url,
-    action)."""
-    hashed = with_content_hash(pages)
-    candidates = hashed.select(
-        "url",
-        F.col("content_hash").alias("cluster_id"),
-        F.lit(0.0).alias("dist"),
-        F.lit(0.0).alias("score"),
-        "n_bytes",
-        "warc_ts",
-        "n_chars",
-    )
-    selected = select_keepers(candidates, cfg)
-    return selected.select("url", "cluster_id", "rank", "keep_url", "action")
 
 
 def exact_unique_representatives(pages_hashed: DataFrame) -> DataFrame:

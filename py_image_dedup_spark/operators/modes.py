@@ -210,10 +210,14 @@ def minhash_signatures(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 # Band rows (signature rows x band columns, store side included) at or
 # under which minhash_pairs and the stream's incremental_pairs take the
-# single-task tier. Memory is O(band rows + distinct candidate pairs): the
-# sort keys (~24 B per band row) and signature matrices (~0.6 KB per doc)
-# of the one task, plus 24 B per distinct (uid_a, uid_b, score); raw pair
-# keys are deduped per chunk of 4M.
+# single-task tier. In the stream the sig log's latest_signatures fold
+# runs in that same task (the log read is coalesced to one partition), so
+# under the cut it folds every log row, superseded ones included, before
+# the kernel sees the view; the footer row count that picks the tier
+# counts those rows too. Memory is O(band rows + distinct candidate
+# pairs): the sort keys (~24 B per band row) and signature matrices
+# (~0.6 KB per doc) of the one task, plus 24 B per distinct (uid_a,
+# uid_b, score); raw pair keys are deduped per chunk of 4M.
 # Measured on a 4-vCPU host, local[4], shuffle width 8, over random
 # subsets of an 86k-doc generate_pages corpus, single-task vs distributed:
 #   batch, minhash_pairs + write (s): 250k band rows 1.3-2.1 vs 9.7-13.3;

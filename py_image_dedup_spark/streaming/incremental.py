@@ -21,6 +21,10 @@ the new docs tagged, so a pair needs at least one new doc — the
 micro-batch analog of the reference re-running find_duplicates for just
 the drained queue items against its one index
 (processing_manager.py:100-136).
+
+A small micro-batch runs two Spark jobs, the sig append and the pairs
+step, each one task with no exchange: at that size each job's fixed
+cost, not compute, sets the latency (run_incremental_stream).
 """
 
 from __future__ import annotations
@@ -62,17 +66,29 @@ def _require_variant_cols(store_columns, cfg: DedupConfig) -> None:
         )
 
 
+def _one_partition(df: DataFrame) -> bool:
+    """True when Spark plans `df` as exactly one partition, e.g. under a
+    coalesce(1). Physical planning only: no job runs."""
+    plan = df._jdf.queryExecution().sparkPlan()  # noqa: SLF001
+    return plan.outputPartitioning().numPartitions() == 1
+
+
 def new_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """A micro-batch's signature rows (url, content_hash, sig[, sig_v_*]):
     one exact-dup representative per content hash, signed and elected the
     way batch's signatures stage does it (every row signed as a narrow
     map, then the key-only map-side election; cfg.norm_variants
-    included)."""
+    included).
+
+    A one-partition input stays one task. The minhash UDF's output reports
+    no partitioning, so the election would otherwise plan an exchange
+    over that one partition; coalesce(1) after signing restates it."""
     hashed = with_content_hash(pages).select("content_hash", "url",
                                              "norm_text")
-    reps = elect_representatives_mapside(
-        minhash_signatures(hashed, cfg).drop("norm_text")
-    )
+    signed = minhash_signatures(hashed, cfg).drop("norm_text")
+    if _one_partition(pages):
+        signed = signed.coalesce(1)
+    reps = elect_representatives_mapside(signed)
     vcols = tuple(f"sig_v_{n}" for n in cfg.norm_variants)
     return reps.select("url", "content_hash", "sig", *vcols)
 
@@ -191,7 +207,11 @@ def latest_signatures(sig_log: DataFrame) -> DataFrame:
     """Current view of the append-only signature log: latest batch wins per
     url. The parquet stand-in for an Iceberg MERGE'd table — on a cluster
     the log+compaction pair becomes `MERGE INTO signatures USING updates ON
-    url` and this view is just the table scan."""
+    url` and this view is just the table scan.
+
+    The fold is a groupBy on url: over a log read coalesced to one
+    partition (the stream's single-task tier) it plans no exchange and
+    runs inside the consumer's task; otherwise it shuffles on url."""
     payload = [c for c in sig_log.columns if c not in ("url", "batch_id")]
     return (
         sig_log.groupBy("url")
@@ -344,6 +364,29 @@ def attach_metrics_listener(spark: SparkSession, metrics_path: str):
     return listener
 
 
+def _write_scan_row(scan_path: str, batch_id: int,
+                    n_band_partitions: int) -> None:
+    """The micro-batch's scan_metrics row, a constant, written from the
+    driver with no Spark job. Written under a `.`-prefixed name, which
+    Spark's listing skips, then renamed, so no reader lists a partial
+    file; the name is per batch, so a replayed batch replaces its row.
+    Column types stay those Spark wrote: long, int, int, boolean."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    row = pa.table({
+        "batch_id": pa.array([batch_id], pa.int64()),
+        "touched_band_partitions": pa.array([0], pa.int32()),
+        "total_band_partitions": pa.array([n_band_partitions], pa.int32()),
+        "store_scanned": pa.array([False], pa.bool_()),
+    })
+    os.makedirs(scan_path, exist_ok=True)
+    name = f"part-{batch_id:08d}.parquet"
+    tmp = os.path.join(scan_path, "." + name)
+    pq.write_table(row, tmp)
+    os.replace(tmp, os.path.join(scan_path, name))
+
+
 def run_incremental_stream(
     spark: SparkSession,
     input_path: str,
@@ -362,34 +405,43 @@ def run_incremental_stream(
     under input_path = the watchdog watch dir). Returns the StreamingQuery.
 
     Each micro-batch keeps the latest row per url, signs one exact-dup
-    representative per content hash (new_signatures) and makes two writes
-    over one store:
-      1. append the new signatures to the sig log. An Observation on that
-         write counts them (an empty batch stops here), and the log's
+    representative per content hash (new_signatures) and makes two Spark
+    writes over one store, one job each at benchmark size:
+      1. append the new signatures to the sig log. A batch Spark read as
+         one split is coalesced to one partition first (reading the split
+         count runs no job), so neither the url dedupe nor the election
+         plans an exchange: dedupe, signing, election and the append run
+         as one task. A batch of several partitions keeps both exchanges.
+         An Observation on the write counts the rows; an empty batch
+         deletes the one empty file Spark wrote and stops here. The log's
          parquet footers then bound the view's band rows with no job.
       2. read the log back (schema as just written), take its
          latest_signatures view with new = (batch_id == this batch), run
          the one micro-batch step, incremental_pairs, on it and append the
          verified pairs. The step takes one of batch's two tiers:
            single-task   while that bound fits modes.SINGLE_TASK_BAND_ROWS:
-                         the whole tagged view goes through one NumPy task
-                         (operators/modes.py:single_task_pairs)
+                         the log read is coalesced to one partition, so
+                         the view's fold and the whole tagged view's NumPy
+                         kernel (operators/modes.py:single_task_pairs)
+                         run as one task with no exchange
            distributed   otherwise: the store rows' bands, cut to the
                          buckets the new docs touch, are the store side of
                          the batch pipeline's capped, salted band join
                          (operators/modes.py:band_join), verified with
                          batch's uid-keyed verify_pairs against the view.
-    For the same input the stream therefore emits the batch pipeline's
-    pairs, hot-bucket cap included, as long as a bucket that ends over
-    bucket_cap is already over it when its first pair would form: a pair
-    emitted while its bucket was under the cap stays emitted.
+    The driver then writes the batch's scan_metrics row with pyarrow (no
+    job). For the same input the stream therefore emits the batch
+    pipeline's pairs, hot-bucket cap included, as long as a bucket that
+    ends over bucket_cap is already over it when its first pair would
+    form: a pair emitted while its bucket was under the cap stays emitted.
 
     A batch replayed after a crash between the two writes appends its
     signatures a second time; latest_signatures folds the copies (same
     url, same batch_id), so the replay emits the same pairs.
 
     Storage layout — all APPEND-only, so no micro-batch ever deletes files
-    another plan still references, and per-batch write cost is O(batch):
+    another plan still references (an empty batch deletes only the empty
+    file it just wrote), and per-batch write cost is O(batch):
 
       store_path/sigs    (url, content_hash, sig[, sig_v_*], batch_id)
                          signature LOG, the one store; current view =
@@ -397,12 +449,13 @@ def run_incremental_stream(
                          the upsert/S7 semantics). compact_signature_log
                          rewrites it to the view.
       store_path/scan_metrics
-                         one row per micro-batch (batch_id,
-                         touched_band_partitions, total_band_partitions,
-                         store_scanned), kept for its readers: no band
-                         store is written or read, so touched is 0,
-                         store_scanned false and the total is
-                         `n_band_partitions`, which sets nothing else.
+                         one row per non-empty micro-batch (batch_id long,
+                         touched_band_partitions int, total_band_partitions
+                         int, store_scanned boolean), one parquet file per
+                         batch written by the driver, kept for its
+                         readers: no band store is written or read, so
+                         touched is 0, store_scanned false and the total
+                         is `n_band_partitions`, which sets nothing else.
       pairs_path         verified pairs, appended per batch
 
     Each pair is emitted exactly once across batches (a pair needs >=1 new
@@ -423,6 +476,12 @@ def run_incremental_stream(
     stream = reader.parquet(input_path)
 
     def process(batch: DataFrame, batch_id: int) -> None:
+        # a batch Spark read as one split keeps one task end to end: with a
+        # single-partition child neither the url dedupe nor the election
+        # plans an exchange, so dedupe, signing, election and the append
+        # run as one task (reading the split count runs no job)
+        if batch.rdd.getNumPartitions() == 1:
+            batch = batch.coalesce(1)
         # T6 queue-dedupe, per drained batch (processing_manager.py:65-69):
         # one row per url, latest warc_ts wins
         cols = [c for c in batch.columns if c != "url"]
@@ -438,31 +497,33 @@ def run_incremental_stream(
         if log_cols is not None:
             # fail BEFORE this batch appends a mixed-schema file to the log
             _require_variant_cols(log_cols, cfg)
+        before = set(os.listdir(sig_path) if os.path.isdir(sig_path) else ())
         appended = Observation()
         (
             new_sigs.observe(appended, F.count(F.lit(1)).alias("rows"))
             .write.mode("append").parquet(sig_path)
         )
-        if not appended.get["rows"]:  # empty micro-batch
+        if not appended.get["rows"]:
+            # empty micro-batch: Spark still wrote one empty file (and its
+            # checksum); drop what this append added so no view lists it
+            for name in set(os.listdir(sig_path)) - before:
+                os.remove(os.path.join(sig_path, name))
             return
         # the log's footer row count bounds the view from above (no job);
         # every signature row has n_bands bands
         log_rows = parquet_rows(sig_path)
         band_rows = None if log_rows is None else log_rows * n_bands
-        view = latest_signatures(
-            spark.read.schema(new_sigs.schema).parquet(sig_path)
-        ).withColumn("new", F.col("batch_id") == batch_id)
+        log = spark.read.schema(new_sigs.schema).parquet(sig_path)
+        if single_task_tier(band_rows):
+            # the view's fold joins the kernel's one task: no exchange
+            log = log.coalesce(1)
+        view = latest_signatures(log).withColumn(
+            "new", F.col("batch_id") == batch_id
+        )
         incremental_pairs(view, cfg, band_rows=band_rows).write.mode(
             "append"
         ).parquet(pairs_path)
-        # one JVM-side row: a Python-side createDataFrame would start
-        # Python workers for a single row
-        spark.range(1, numPartitions=1).select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(0).alias("touched_band_partitions"),
-            F.lit(n_band_partitions).alias("total_band_partitions"),
-            F.lit(False).alias("store_scanned"),
-        ).write.mode("append").parquet(scan_path)
+        _write_scan_row(scan_path, batch_id, n_band_partitions)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", store_path + "_ckpt"

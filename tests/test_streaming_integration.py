@@ -13,7 +13,10 @@ modified-file path, processing_manager.py:100-136). Asserts:
     (historical pairs from before the upsert — the log keeps them,
     downstream dedupes);
   * with the hot-bucket cap firing, the stream emits exactly the batch
-    pipeline's pairs.
+    pipeline's pairs;
+  * a micro-batch read as one split runs two Spark jobs, an empty one
+    adds no file to the sig log, and a batch read as two partitions
+    appends the same rows as the same pages in one file.
 """
 
 from __future__ import annotations
@@ -107,6 +110,9 @@ def stream_run(spark, tmp_path_factory):
     yield {
         "spark": spark,
         "cfg": cfg,
+        "input_dir": input_dir,
+        "run_id": str(q.runId),
+        "batches": [p["numInputRows"] for p in q.recentProgress],
         "store_dir": store_dir,
         "pairs_dir": pairs_dir,
         "metrics_dir": metrics_dir,
@@ -125,6 +131,109 @@ def test_stream_ran_multiple_batches_and_layout(stream_run):
     assert sorted(os.listdir(stream_run["store_dir"])) == [
         "scan_metrics", "sigs"
     ]
+
+
+def _jobs(spark, run_id: str) -> int:
+    """Spark jobs a query ran: streaming runs each micro-batch under the
+    query's run id as its job group."""
+    tracker = spark.sparkContext.statusTracker()
+    return len(tracker.getJobIdsForGroup(run_id))
+
+
+def test_one_file_micro_batch_runs_two_jobs(stream_run):
+    """A micro-batch Spark reads as one split runs its sig append as one
+    job (url dedupe, signing, election and write in one task) and its
+    pairs step as one more (the view's fold inside the kernel's task);
+    the scan_metrics row is written without a job."""
+    non_empty = [n for n in stream_run["batches"] if n > 0]
+    assert len(non_empty) == 2
+    assert _jobs(stream_run["spark"], stream_run["run_id"]) <= 2 * len(
+        non_empty
+    )
+
+
+def _stream(spark, input_dir, root, cfg, max_files=1):
+    """Drain input_dir into a fresh store under root; returns the query."""
+    q = run_incremental_stream(
+        spark, input_dir, os.path.join(root, "store"),
+        os.path.join(root, "pairs"), cfg, available_now=True,
+        max_files_per_trigger=max_files, n_band_partitions=16,
+    )
+    assert q.awaitTermination(300), "stream did not drain in time"
+    return q
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _stage(files, input_dir: str) -> None:
+    """Copy wave files into input_dir with increasing mtimes: the file
+    source takes files in modification-time order."""
+    os.makedirs(input_dir)
+    for i, f in enumerate(files):
+        dst = os.path.join(input_dir, os.path.basename(f))
+        shutil.copyfile(f, dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def test_empty_micro_batch_leaves_no_file(stream_run, tmp_path):
+    """An input file with no rows is a micro-batch of its own: it must add
+    no file to the sig log, and the stream's pairs must equal those of
+    the same stream without it."""
+    spark, src = stream_run["spark"], stream_run["input_dir"]
+    empty = str(tmp_path / "wave1b.parquet")
+    _write_wave(spark.read.parquet(os.path.join(src, "wave1.parquet"))
+                .limit(0), empty)
+    input_dir = str(tmp_path / "in")
+    _stage([os.path.join(src, "wave1.parquet"), empty,
+            os.path.join(src, "wave2.parquet")], input_dir)
+    q = _stream(spark, input_dir, str(tmp_path), stream_run["cfg"])
+    assert [p["numInputRows"] == 0 for p in q.recentProgress] == [
+        False, True, False
+    ]
+    sig_path = str(tmp_path / "store" / "sigs")
+    assert len(glob.glob(os.path.join(sig_path, "part-*.parquet"))) == 2
+    assert sorted(os.listdir(tmp_path / "store" / "scan_metrics")) == [
+        "part-00000000.parquet", "part-00000002.parquet"
+    ]
+    assert _rows(spark.read.parquet(str(tmp_path / "pairs"))) == _rows(
+        spark.read.parquet(stream_run["pairs_dir"])
+    )
+
+
+def test_one_and_many_partition_sig_appends_emit_same_rows(stream_run,
+                                                           tmp_path):
+    """Both waves in one trigger, as two files (two input partitions: the
+    url dedupe and the election keep their exchanges) and as one file
+    (one split: the whole append in one task), append the same sig log
+    rows and emit the same pairs."""
+    spark, cfg = stream_run["spark"], stream_run["cfg"]
+    waves = [os.path.join(stream_run["input_dir"], f"wave{i}.parquet")
+             for i in (1, 2)]
+    many, one = str(tmp_path / "many"), str(tmp_path / "one")
+    _stage(waves, os.path.join(many, "in"))
+    os.makedirs(os.path.join(one, "in"))
+    _write_wave(spark.read.parquet(*waves),
+                os.path.join(one, "in", "waves.parquet"))
+    assert spark.read.parquet(os.path.join(many, "in")).rdd \
+        .getNumPartitions() == 2
+    assert spark.read.parquet(os.path.join(one, "in")).rdd \
+        .getNumPartitions() == 1
+
+    jobs, got = {}, {}
+    for root, max_files in ((many, 2), (one, 1)):
+        q = _stream(spark, os.path.join(root, "in"), root, cfg, max_files)
+        assert len(q.recentProgress) == 1
+        jobs[root] = _jobs(spark, str(q.runId))
+        got[root] = (
+            _rows(spark.read.parquet(os.path.join(root, "store", "sigs"))),
+            _rows(spark.read.parquet(os.path.join(root, "pairs"))),
+        )
+    assert got[one][0] and got[one][1]
+    assert got[many] == got[one]
+    # the one-split batch runs fewer jobs: its plan has no exchange
+    assert jobs[one] == 2 < jobs[many]
 
 
 def test_per_batch_metrics_rows_emitted(stream_run):
