@@ -1,3 +1,3 @@
 """Pipeline operators: exact dedup, LSH candidate join, connected
-components, keep-best-copy selection, incremental anti-joins, similarity
-search, multimodal plumbing."""
+components, keep-best-copy selection, decontamination, similarity
+search."""

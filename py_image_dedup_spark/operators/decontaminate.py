@@ -56,7 +56,7 @@ def contaminated_ids(
 ) -> DataFrame:
     """(id_col) — corpus documents sharing >= 1 verbatim n-token gram with
     any benchmark document. The output is the DROP list; join it back
-    left_anti to decontaminate (see `decontaminate`)."""
+    left_anti to decontaminate."""
     bench_grams = (
         benchmark.select(F.explode(token_ngrams(text_col, n)).alias("gram"))
         .distinct()
@@ -99,18 +99,3 @@ def top_ngrams(
         .limit(k)
     )
 
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "norm_text",
-    broadcast_bench: bool = True,
-) -> DataFrame:
-    """Corpus minus contaminated documents (left_anti on the drop list)."""
-    drops = contaminated_ids(
-        corpus, benchmark, n=n, id_col=id_col, text_col=text_col,
-        broadcast_bench=broadcast_bench,
-    )
-    return corpus.join(drops, id_col, "left_anti")

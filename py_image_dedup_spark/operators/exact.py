@@ -50,24 +50,6 @@ def exact_unique_representatives(pages_hashed: DataFrame) -> DataFrame:
     return picked.select("content_hash", *[F.col(f"_rep.{c}").alias(c) for c in others])
 
 
-def exact_unique_representatives_broadcast(pages_hashed: DataFrame) -> DataFrame:
-    """Shuffle-light variant: the winner election shuffles ONLY
-    (url, content_hash) key pairs; the text payload then reaches the
-    winners through a broadcast semi-join against the (small) winner-url
-    list, i.e. a second pruned pass over the source instead of a full-text
-    shuffle. Right when #winners x url-width fits the broadcast budget
-    (tens of millions of rows); beyond that, fall back to
-    exact_unique_representatives (or bucket the source table by url).
-    """
-    winners = (
-        pages_hashed.select("url", "content_hash")
-        .groupBy("content_hash")
-        .agg(F.min("url").alias("url"))
-        .select("url")
-    )
-    return pages_hashed.join(F.broadcast(winners), "url", "left_semi")
-
-
 def elect_representatives_mapside(
     sig_rows: DataFrame, key: str = "content_hash", tiebreak: str = "url"
 ) -> DataFrame:
@@ -101,32 +83,3 @@ def elect_representatives_mapside(
         key, *[F.col(f"_rep.{c}").alias(c) for c in [tiebreak] + payload]
     )
 
-
-def exact_unique_representatives_auto(
-    pages_hashed: DataFrame,
-    broadcast_limit: int,
-    stats: dict | None = None,
-    known_upper_bound: int | None = None,
-) -> DataFrame:
-    """Size-aware winner election. At 100x scale (billions of distinct
-    contents) a static broadcast default would kill the driver; the min_by
-    shuffle is always safe — so the winner count picks the strategy.
-
-    `known_upper_bound` (e.g. the input row count, which the pipeline has
-    already measured) short-circuits the decision: winners <= rows, so if
-    rows fit the broadcast budget no counting job runs at all. Only when
-    the bound is absent or too large does the key-only distinct count
-    (map-side combined, no payload moves) run. `stats` receives the choice.
-    """
-    if known_upper_bound is not None and 0 < known_upper_bound <= broadcast_limit:
-        n_winners = known_upper_bound  # upper bound, not exact
-        use_broadcast = True
-    else:
-        n_winners = pages_hashed.select("content_hash").distinct().count()
-        use_broadcast = 0 < n_winners <= broadcast_limit
-    if stats is not None:
-        stats["rep_strategy"] = "broadcast" if use_broadcast else "min_by"
-        stats["n_winners"] = n_winners
-    if use_broadcast:
-        return exact_unique_representatives_broadcast(pages_hashed)
-    return exact_unique_representatives(pages_hashed)

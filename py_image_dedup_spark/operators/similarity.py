@@ -34,22 +34,16 @@ def dot_col(a, b):
 
 
 def norm_col(v):
-    """L2 norm of an array column — the exact subexpression `cosine_col`
-    evaluates per side. Pre-computing it per ROW before a join/cross-join
-    turns the 3 array-aggregates per scored pair into 1 (the dot), with
-    bit-identical sims: same expression tree over the same array yields
-    the same double, and `dot / (na * nb)` is unchanged (guide §1.2
-    per-task work; measured in OPTIMIZATION_r06.md)."""
+    """L2 norm of an array column. Pre-computing it per ROW before a
+    join/cross-join turns the 3 array-aggregates per scored cosine
+    `dot / (na * nb)` into 1 (the dot), with bit-identical sims: the same
+    expression tree over the same array yields the same double (measured
+    in OPTIMIZATION_r06.md)."""
     dv = F.transform(v, lambda x: x.cast("double"))
     return F.sqrt(
         F.aggregate(F.transform(dv, lambda x: x * x), F.lit(0.0),
                     lambda a_, v_: a_ + v_)
     )
-
-
-def cosine_col(a, b):
-    """Cosine similarity of two array columns, computed in double, JVM-side."""
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
 def brute_force_topk(

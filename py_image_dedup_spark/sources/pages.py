@@ -217,20 +217,3 @@ def generate_pages(
 
     return base.mapInPandas(gen, schema=PAGES_SCHEMA)
 
-
-def expected_clusters(pages_fixture: DataFrame) -> DataFrame:
-    """Golden expectations at max_dist=0.30: all variants of an even group
-    share one cluster keyed by the original's url; keeper = original.
-    `boiler` pages are excluded — they cluster ACROSS groups by design
-    (or get capped at scale); dedicated tests cover both regimes."""
-    from pyspark.sql import functions as F
-
-    return pages_fixture.where(F.col("variant") != "boiler").select(
-        "url",
-        "group_id",
-        F.col("variant"),
-        F.when(F.col("variant") == "original", F.lit("keep"))
-        .when(F.col("variant") == "singleton", F.lit("keep"))
-        .otherwise(F.lit("delete"))
-        .alias("expected_action"),
-    )

@@ -4,15 +4,13 @@ The reference's daemon (SURVEY.md §2.7) is: watchdog events -> debounced
 queue (30 s settle) -> per-item re-analysis + re-dedup
 (py_image_dedup/processing_manager.py:19-136). The Spark-native analog:
 
-  readStream (new page files / Iceberg appends)
+  readStream (new page files)
     -> dropDuplicates on url within batch   (T6, OrderedDict dedupe)
     -> foreachBatch incremental_pairs        (T7, re-analyze + re-dedup)
   trigger(processingTime=...)                (T5, RegularIntervalWorker)
 
 The debounce/settle window (T4, processing_manager.py:76-80) maps to the
-processing-time trigger interval; exact event-time parity would use
-session_window(ts, '30 seconds') which is provided by session_windows()
-for event tables.
+processing-time trigger interval.
 
 incremental_pairs is deliberately *restricted re-dedup*: each micro-batch
 appends its signatures to the one store (an append-only signature log),
@@ -135,74 +133,6 @@ def incremental_pairs(
     return verify_pairs(pairs, sigs, cfg, sig_cols=sig_cols)
 
 
-def filter_events(
-    events: DataFrame,
-    url_prefixes: tuple[str, ...] = (),
-    exclude_pattern: str | None = None,
-    lang_allow: tuple[str, ...] = (),
-) -> DataFrame:
-    """T2 (file_watch.py:60-66): keep only events whose url is under a
-    watched root, doesn't match the exclusion regex, and passes the
-    lang allow-list (extension-filter analog)."""
-    out = events
-    if url_prefixes:
-        cond = None
-        for p in url_prefixes:
-            c = F.col("url").startswith(p)
-            cond = c if cond is None else (cond | c)
-        out = out.where(cond)
-    if exclude_pattern:
-        out = out.where(~F.col("url").rlike(exclude_pattern))
-    if lang_allow:
-        out = out.where(F.col("lang").isin(*lang_allow))
-    return out
-
-
-def route_events(events: DataFrame) -> dict[str, DataFrame]:
-    """T3 (file_watch.py:23-58): CDC routing by event kind.
-
-    created/modified -> upsert; moved -> delete old url + upsert new;
-    deleted -> remove. Input: (kind, url, new_url?, ...payload). Returns
-    {"upserts": urls to (re)analyze, "deletes": urls to drop from store}.
-    """
-    cols = [c for c in events.columns if c not in ("kind", "new_url")]
-    upserts = events.where(
-        F.col("kind").isin("created", "modified")
-    ).select(*cols)
-    if "new_url" in events.columns:
-        moved = events.where(F.col("kind") == "moved")
-        upserts = upserts.unionByName(
-            moved.select(
-                F.col("new_url").alias("url"),
-                *[c for c in cols if c != "url"],
-            )
-        )
-        move_deletes = moved.select("url")
-    else:
-        move_deletes = events.limit(0).select("url")
-    deletes = (
-        events.where(F.col("kind") == "deleted").select("url")
-        .unionByName(move_deletes)
-        .distinct()
-    )
-    return {"upserts": upserts, "deletes": deletes}
-
-
-def session_windows(events: DataFrame, gap: str = "30 seconds") -> DataFrame:
-    """Event-time settle window (T4 exact parity): one row per
-    (key, session_window) with the event count."""
-    return (
-        events.groupBy(F.session_window(F.col("ts"), gap), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
 def latest_signatures(sig_log: DataFrame) -> DataFrame:
     """Current view of the append-only signature log: latest batch wins per
     url. The parquet stand-in for an Iceberg MERGE'd table — on a cluster
@@ -231,27 +161,39 @@ def compact_signature_log(spark: SparkSession, store_path: str) -> dict:
     batches a long-running daemon has appended, and the log's footer row
     count, which picks the pairs tier, is the live count again.
 
+    `sigs` stays a valid log at every moment, so a crash anywhere leaves
+    the view intact and a rerun finishes the job. The compacted rows are
+    written to a tmp dir, moved into `sigs` one file rename at a time
+    (Spark's part names carry a per-write UUID, so none collides), and
+    only then are the old files deleted. A compacted row copies the log
+    row it won (same url, batch_id and payload), so latest_signatures over
+    any mix of old and moved files is the same view, and the footer row
+    count stays an upper bound.
+
     MUST NOT run concurrently with an active micro-batch (call it while
     the StreamingQuery is stopped, or from a maintenance window between
-    triggers): the swap is a directory rename, not a transaction. On a
-    cluster this whole function is Iceberg `rewrite_data_files` /
-    `expire_snapshots` and the caveat disappears. Returns the log's
-    before/after row counts.
+    triggers): files it deletes may be in that batch's plan. Returns the
+    log's before/after row counts.
     """
     import shutil
 
+    def parts(path: str) -> list[str]:  # data files and their .crc twins
+        return sorted(n for n in os.listdir(path)
+                      if n.lstrip(".").startswith("part-"))
+
     sig_path = os.path.join(store_path, "sigs")
+    sig_tmp = sig_path + "__compact_tmp"
+    old = parts(sig_path)
     sig_log = spark.read.parquet(sig_path)
     stats = {"sigs_before": sig_log.count()}
-    sig_tmp = sig_path + "__compact_tmp"
     latest_signatures(sig_log).select(*sig_log.columns).write.mode(
         "overwrite"
     ).parquet(sig_tmp)
-    old = sig_path + "__compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(sig_path, old)
-    os.rename(sig_tmp, sig_path)
-    shutil.rmtree(old)
+    for name in parts(sig_tmp):
+        os.rename(os.path.join(sig_tmp, name), os.path.join(sig_path, name))
+    for name in old:
+        os.remove(os.path.join(sig_path, name))
+    shutil.rmtree(sig_tmp)
     stats["sigs_after"] = spark.read.parquet(sig_path).count()
     return stats
 

@@ -1,58 +1,9 @@
-"""Action application (S12 analog) + HTML head metadata extraction (P2)."""
+"""HTML head metadata extraction (P2) and the rules that read it."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.functions.normalize import extract_meta_udf
-from py_image_dedup_spark.operators.apply import (
-    action_summary,
-    apply_actions,
-    keepers,
-    split_actions,
-)
-from py_image_dedup_spark.plans.pipeline import run_dedup_pipeline
-from py_image_dedup_spark.sources.pages import generate_pages
-
-
-def test_split_and_apply_actions(spark, tmp_path):
-    pages = generate_pages(spark, 10, seed=11).cache()
-    out = run_dedup_pipeline(
-        spark, pages, DedupConfig(max_dist=0.30), str(tmp_path / "ck"),
-        resume=False,
-    )
-    actions = out["actions"]
-    kept, removed = split_actions(pages, actions)
-    assert kept.count() == actions.where("action = 'keep'").count()
-    assert removed.count() == actions.where("action = 'delete'").count()
-    # kept + removed partition pages exactly
-    assert kept.count() + removed.count() == pages.count()
-    # originals are never removed (removed carries the pages columns)
-    assert removed.where("variant = 'original'").count() == 0
-
-    res = apply_actions(
-        pages, actions,
-        kept_path=str(tmp_path / "kept"),
-        quarantine_path=str(tmp_path / "quar"),
-    )
-    assert spark.read.parquet(str(tmp_path / "kept")).count() == kept.count()
-    assert spark.read.parquet(str(tmp_path / "quar")).count() == removed.count()
-
-    # dry-run writes nothing
-    apply_actions(pages, actions, kept_path=str(tmp_path / "nope"),
-                  dry_run=True)
-    import os
-
-    assert not os.path.exists(str(tmp_path / "nope"))
-
-    summary = {
-        r["action"]: (r["n"], r["total_bytes"])
-        for r in action_summary(actions, out["pages_meta"]).collect()
-    }
-    assert summary["keep"][0] == kept.count()
-    assert summary["delete"][1] > 0
-    assert keepers(actions).count() == kept.count()
 
 
 def test_extract_meta(spark):

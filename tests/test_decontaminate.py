@@ -3,12 +3,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from py_image_dedup_spark.functions.urls import canonical_url
 from py_image_dedup_spark.operators.decontaminate import (
     contaminated_ids,
-    decontaminate,
     token_ngrams,
 )
 
@@ -69,12 +66,6 @@ def test_broadcast_and_shuffle_paths_agree(spark):
         ).collect()
     }
     assert a == b
-
-
-def test_decontaminate_drops_exactly_the_hits(spark):
-    corpus, bench = _dfs(spark)
-    kept = {r["doc_id"] for r in decontaminate(corpus, bench, n=8).collect()}
-    assert kept == set(CORPUS) - {1, 3, 5}
 
 
 def test_token_ngrams_short_and_empty(spark):

@@ -1,61 +1,18 @@
-"""Incremental / cleanup operators (J2, J3, S7) and the micro-batch
-incremental dedup step (T7)."""
+"""The micro-batch incremental dedup step (T7)."""
 
 from __future__ import annotations
 
-import datetime
-
+import pytest
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
-from py_image_dedup_spark.operators.incremental import (
-    DATAMODEL_VERSION,
-    fresh_pages,
-    orphan_signatures,
-)
 from py_image_dedup_spark.operators.lsh import lsh_candidate_pipeline
 from py_image_dedup_spark.sources.pages import generate_pages
 from py_image_dedup_spark.streaming.incremental import (
     incremental_pairs,
     latest_signatures,
     new_signatures,
-    session_windows,
 )
-
-TS = datetime.datetime(2024, 1, 1)
-META = "url string, warc_ts timestamp, n_bytes long"
-SIGS = "url string, warc_ts timestamp, n_bytes long, datamodel_version int"
-
-
-def test_fresh_pages_staleness_semantics(spark):
-    pages = spark.createDataFrame(
-        [
-            ("u1", TS, 10),  # unchanged -> skip
-            ("u2", TS, 99),  # size changed -> re-analyze
-            ("u3", TS, 10),  # not indexed -> analyze
-            ("u4", TS, 10),  # old datamodel version -> re-analyze
-        ],
-        META,
-    )
-    sigs = spark.createDataFrame(
-        [
-            ("u1", TS, 10, DATAMODEL_VERSION),
-            ("u2", TS, 10, DATAMODEL_VERSION),
-            ("u4", TS, 10, DATAMODEL_VERSION - 1),
-        ],
-        SIGS,
-    )
-    got = {r["url"] for r in fresh_pages(pages, sigs).collect()}
-    assert got == {"u2", "u3", "u4"}
-
-
-def test_orphan_signatures(spark):
-    pages = spark.createDataFrame([("u1", TS, 1)], META)
-    sigs = spark.createDataFrame(
-        [("u1", TS, 1, 1), ("gone", TS, 1, 1)], SIGS
-    )
-    got = {r["url"] for r in orphan_signatures(sigs, pages).collect()}
-    assert got == {"gone"}
 
 
 def test_incremental_batch_matches_full_rerun(spark):
@@ -101,18 +58,59 @@ def test_incremental_batch_matches_full_rerun(spark):
     assert got == expected_rep
 
 
-def test_session_windows_batch(spark):
-    rows = [
-        (1, TS),
-        (1, TS + datetime.timedelta(seconds=10)),
-        (1, TS + datetime.timedelta(seconds=120)),  # new session (gap 110s)
-        (2, TS),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = session_windows(ev, gap="30 seconds")
-    per_user = {
-        (r["user_id"]): r["n_events"]
-        for r in got.orderBy("user_id", "session_start").collect()
-    }
-    assert got.count() == 3  # user1 x2 sessions, user2 x1
-    assert per_user[2] == 1
+
+def test_compaction_crash_keeps_the_view(spark, tmp_path, monkeypatch):
+    """compact_signature_log killed at its k-th file move or delete leaves
+    a log whose latest_signatures view is the one before compaction, and
+    a rerun then leaves one row per url with that same view."""
+    import os
+    import shutil
+
+    from py_image_dedup_spark.streaming.incremental import (
+        compact_signature_log,
+    )
+
+    base = tmp_path / "base"
+    for batch_id, urls in enumerate((range(0, 6), range(3, 9), range(0, 2))):
+        spark.createDataFrame(
+            [(f"u{i}", f"h{i}-{batch_id}", batch_id) for i in urls],
+            "url string, content_hash string, batch_id int",
+        ).coalesce(2).write.mode("append").parquet(str(base / "sigs"))
+
+    def view(store):
+        log = spark.read.parquet(str(store / "sigs"))
+        return sorted(map(tuple, latest_signatures(log).collect()))
+
+    want = view(base)
+    ops = []  # "rename" or "remove", one per file move or delete
+    real = {"rename": os.rename, "remove": os.remove}
+
+    def counting(kind, crash_at):
+        def op(*args):
+            ops.append(kind)
+            if len(ops) == crash_at:
+                raise OSError(f"crash at {kind} {crash_at}")
+            return real[kind](*args)
+        return op
+
+    def compact(store, crash_at=None):
+        ops.clear()
+        with monkeypatch.context() as m:
+            for kind in real:
+                m.setattr(os, kind, counting(kind, crash_at))
+            return compact_signature_log(spark, str(store))
+
+    shutil.copytree(base, tmp_path / "dry")
+    compact(tmp_path / "dry")
+    n_moves = ops.count("rename")
+    assert n_moves and len(ops) > n_moves
+    # first and last move, first and last delete
+    for k in sorted({1, n_moves, n_moves + 1, len(ops)}):
+        store = tmp_path / f"crash{k}"
+        shutil.copytree(base, store)
+        with pytest.raises(OSError, match=f"crash at .* {k}$"):
+            compact(store, crash_at=k)
+        assert view(store) == want, k
+        stats = compact(store)
+        assert stats["sigs_after"] == len(want) < stats["sigs_before"], k
+        assert view(store) == want, k

@@ -273,28 +273,6 @@ def test_analyse_only_stops_after_signatures(spark, pages, ckpt):
     assert out["signatures"].count() > 0
 
 
-def test_rep_election_is_size_aware(spark, pages):
-    """Large winner counts must take the min_by path, small ones the
-    broadcast path (VERDICT r1: static broadcast default kills the driver
-    at billions of distinct contents)."""
-    from py_image_dedup_spark.operators.exact import (
-        exact_unique_representatives_auto,
-        with_content_hash,
-    )
-
-    hashed = with_content_hash(pages)
-    stats: dict = {}
-    small = exact_unique_representatives_auto(hashed, 10**9, stats)
-    assert stats["rep_strategy"] == "broadcast"
-    stats2: dict = {}
-    big = exact_unique_representatives_auto(hashed, 1, stats2)
-    assert stats2["rep_strategy"] == "min_by"
-    # both strategies elect the identical representative set
-    assert sorted(r["url"] for r in small.select("url").collect()) == sorted(
-        r["url"] for r in big.select("url").collect()
-    )
-
-
 def test_mapside_election_matches_elect_then_sign(spark, pages):
     """The pipeline's map-side signature election (sign every row, then
     elect over (content_hash, url, sig) — norm_text never shuffled) must
