@@ -1,3 +1,3 @@
 """Pipeline operators: exact dedup, LSH candidate join, connected
 components, keep-best-copy selection, decontamination, similarity
-search."""
+search, multimodal plumbing (not reached by any entry point yet)."""

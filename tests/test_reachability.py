@@ -1,7 +1,9 @@
 """Every package module is imported, directly or transitively, from an
 entry point: jobs/*.py, __spark_entry__.py, scripts/check_oracles.py or
 perfbench/. A module no entry point reaches is dead code. Pure AST walk
-over import statements (in-function imports included), no Spark."""
+over import statements (in-function imports included), no Spark. The
+image/audio codecs are the known exception; KNOWN_UNREACHED must match
+exactly, so a new dead module fails and so does a stale entry."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "py_image_dedup_spark"
+KNOWN_UNREACHED = {f"{PKG}.operators.jpeg", f"{PKG}.operators.multimodal"}
 ENTRY_POINTS = [
     *ROOT.glob("jobs/*.py"), ROOT / "__spark_entry__.py",
     ROOT / "scripts" / "check_oracles.py", *ROOT.glob("perfbench/*.py"),
@@ -43,5 +46,7 @@ def test_every_package_module_is_reached_from_an_entry_point():
         if m not in reached:
             reached.add(m)
             todo.extend(_imported(MODULES[m]))
-    unreached = sorted(MODULES.keys() - reached)
-    assert not unreached, f"no entry point imports {unreached}"
+    unreached = MODULES.keys() - reached
+    assert unreached == KNOWN_UNREACHED, (
+        f"no entry point imports {sorted(unreached - KNOWN_UNREACHED)}; "
+        f"reached or gone: {sorted(KNOWN_UNREACHED - unreached)}")
