@@ -72,11 +72,6 @@ class DedupConfig:
     # signature/band bytes by ~(1+len)/1.
     norm_variants: tuple[str, ...] = ()
 
-    # --- SimHash mode ---
-    simhash_bits: int = 64
-    # Hamming cutoff = ceil(simhash_bits * max_dist); pigeonhole banding uses
-    # cutoff+1 blocks.
-
     # --- substring-containment mode ---
     substring_len: int = 50         # sampled substring window
     substring_stride: int = 25      # sampling stride
@@ -111,17 +106,6 @@ class DedupConfig:
     # n_salts partitions (A-side salted by url hash, B-side replicated).
     salt_threshold: int = 64
     n_salts: int = 16
-    # Verification join shape is size-aware: candidate-pair lists up to
-    # this many rows ride as a broadcast into shuffle-free probes of the
-    # signature table (signatures never shuffle); above it, plain shuffle
-    # joins. The broadcast lands TWICE per verify plan and each build-side
-    # hash relation costs ~2-3x the row bytes on the executor heap, so the
-    # default is sized to the session's 64 MB broadcast budget (~130 B/row
-    # x 500k ~ 65 MB): a 3.5 GB executor survives it with full cache +
-    # sort buffers resident (measured: a 2M-row limit OOMed 1-core
-    # executors at 3M docs). Above the limit the shuffle join is the only
-    # shape that scales anyway.
-    broadcast_pairs_limit: int = 500_000
     # Clusters-stage single-task tier: when the committed pair-edge count
     # is at or below this, the clusters stage runs ONE NumPy union-find
     # task (operators/components.single_task_components) whose rep-level
@@ -164,10 +148,6 @@ class DedupConfig:
     # broadcast the benchmark gram set (False = compact-hash shuffle
     # semi-join for benchmark sets beyond broadcast budget)
     decontaminate_broadcast: bool = True
-    # drop lists above this row count skip the forced broadcast anti-join
-    # and shuffle instead — a heavily contaminated corpus (or a tiny n)
-    # can produce a drop list far beyond driver/executor broadcast budget
-    decontaminate_max_broadcast_drops: int = 2_000_000
 
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.num_hashes:
@@ -190,7 +170,10 @@ class DedupConfig:
     def hamming_cutoff(self) -> int:
         import math
 
-        return math.ceil(self.simhash_bits * self.max_dist)
+        # Deferred import: functions.simhash imports this module.
+        from py_image_dedup_spark.functions.simhash import SIMHASH_BITS
+
+        return math.ceil(SIMHASH_BITS * self.max_dist)
 
 
 # --------------------------------------------------------------- sources

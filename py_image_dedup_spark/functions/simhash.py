@@ -20,6 +20,10 @@ from pyspark.sql.types import LongType
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.functions.minhash import shingle_hashes_u64
 
+# Fingerprint width: simhash64 builds SIMHASH_BITS-bit fingerprints and
+# simhash_blocks splits that many bits, so distances divide by it.
+SIMHASH_BITS = 64
+
 
 def make_simhash_udf(cfg: DedupConfig) -> Callable:
     k = cfg.shingle_k
@@ -66,9 +70,10 @@ def simhash_blocks(col: Column, n_blocks: int) -> Column:
     Widths are distributed as evenly as possible when n_blocks doesn't
     divide 64 (first `64 % n_blocks` blocks get the extra bit).
     """
-    if not 1 <= n_blocks <= 64:
-        raise ValueError(f"n_blocks must be in [1, 64], got {n_blocks}")
-    base, extra = divmod(64, n_blocks)
+    if not 1 <= n_blocks <= SIMHASH_BITS:
+        raise ValueError(
+            f"n_blocks must be in [1, {SIMHASH_BITS}], got {n_blocks}")
+    base, extra = divmod(SIMHASH_BITS, n_blocks)
     parts = []
     offset = 0
     for i in range(n_blocks):

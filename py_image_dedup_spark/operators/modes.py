@@ -4,7 +4,7 @@ Each mode maps (url, norm_text) -> verified pairs (url_a, url_b, dist,
 score) under the shared contract `dist <= cfg.max_dist`:
 
   minhash    dist = 1 − est. Jaccard (fraction of agreeing sig positions)
-  simhash    dist = Hamming(fp_a, fp_b) / simhash_bits
+  simhash    dist = Hamming(fp_a, fp_b) / SIMHASH_BITS (64)
   substring  dist = 1 − containment (shared keys / min(|keys|)) — catches
              long verbatim blocks embedded in otherwise-different pages,
              which Jaccard dilutes away
@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.functions.shingles import substring_keys
 from py_image_dedup_spark.functions.simhash import (
+    SIMHASH_BITS,
     hamming_col,
     make_simhash_udf,
     simhash_blocks,
@@ -245,6 +246,19 @@ def single_task_tier(band_rows: int | None) -> bool:
     return band_rows is not None and band_rows <= SINGLE_TASK_BAND_ROWS
 
 
+# Distributed-tier verification join shape is size-aware: candidate-pair
+# lists up to this many rows ride as a broadcast into shuffle-free probes
+# of the signature table (signatures never shuffle); above it, plain
+# shuffle joins. The broadcast lands TWICE per verify plan and each
+# build-side hash relation costs ~2-3x the row bytes on the executor heap,
+# so the limit is sized to the session's 64 MB broadcast budget (~130
+# B/row x 500k ~ 65 MB): a 3.5 GB executor survives it with full cache +
+# sort buffers resident (measured: a 2M-row limit OOMed 1-core executors
+# at 3M docs). Above the limit the shuffle join is the only shape that
+# scales anyway.
+BROADCAST_PAIRS_LIMIT = 500_000
+
+
 def single_task_pairs(sigs: DataFrame, cfg: DedupConfig,
                       stats: dict | None = None,
                       full_band: bool = False) -> DataFrame:
@@ -334,14 +348,14 @@ def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
         stats["full_band_pairs"] = n_full
     verified = _minhash.verify_pairs(
         pairs.where(F.col("score") < b), signatures, cfg,
-        broadcast_pairs=n_rest <= cfg.broadcast_pairs_limit,
+        broadcast_pairs=n_rest <= BROADCAST_PAIRS_LIMIT,
         sig_cols=sig_cols,
     )
     if n_full == 0:
         return verified
     resolved = _minhash.resolve_pair_urls(
         pairs.where(F.col("score") >= b), signatures,
-        broadcast_pairs=n_full <= cfg.broadcast_pairs_limit,
+        broadcast_pairs=n_full <= BROADCAST_PAIRS_LIMIT,
     )
     return verified.unionByName(resolved)
 
@@ -376,7 +390,7 @@ def simhash_pairs(signatures: DataFrame, cfg: DedupConfig,
             "uid_b",
         )
     )
-    dist = hamming_col(F.col("h_a"), F.col("h_b")) / F.lit(float(cfg.simhash_bits))
+    dist = hamming_col(F.col("h_a"), F.col("h_b")) / F.lit(float(SIMHASH_BITS))
     return (
         joined.withColumn("dist", dist)
         .where(F.col("dist") <= F.lit(float(cfg.max_dist)))

@@ -4,7 +4,7 @@ A training-data pipeline at 100 TB carries images/audio/video as opaque
 `binary` columns beside typed metadata, and decodes only inside Arrow
 batches at the last moment. The Spark-side plumbing here — schemas,
 mapInPandas batch shape, partition sizing — is real and tested, and so
-are two REAL pure-NumPy codecs (no external libraries needed):
+are these REAL pure-NumPy codecs (no external libraries needed):
 
   * BMP  — uncompressed 24/32-bit BI_RGB, decode + encode
            (image_features and resize_images run end-to-end on real bytes)
@@ -12,10 +12,6 @@ are two REAL pure-NumPy codecs (no external libraries needed):
            + all five scanline filters in NumPy) + encode (filter 0)
   * WAV  — RIFF/WAVE PCM 8/16-bit, decode + encode
            (audio_features runs end-to-end on real bytes)
-  * JPEG — baseline sequential DCT (T.81) of any sampling layout AND
-           progressive (SOF2, Annex G: spectral selection + successive
-           approximation), plus grayscale baseline/progressive encoders
-           (operators/jpeg.py)
   * MP3  — frame-header metadata WITHOUT decode (parse_mp3_meta: exact
            CBR/VBR duration by counting frames, rate/channels/bitrate) —
            the audio_meta ingest scan
@@ -41,12 +37,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-from py_image_dedup_spark.operators.jpeg import (
-    decode_jpeg,
-    encode_jpeg,
-    is_jpeg,
-)
 
 IMAGE_FEATURES_SCHEMA = (
     "url string, width int, height int, n_bytes long, phash long"
@@ -483,10 +473,10 @@ def image_features(
 ) -> DataFrame:
     """(url, payload binary) -> IMAGE_FEATURES_SCHEMA via mapInPandas.
 
-    Real path (fake=False) decodes uncompressed BMP payloads with the
-    pure-NumPy codec above; other formats raise (JPEG/PNG need PIL /
-    libvips — swap the decode call inside the same batch kernel, the
-    Spark plan is identical).
+    Real path (fake=False) decodes BMP and PNG payloads with the
+    pure-NumPy codecs above; other formats (JPEG among them) raise
+    NotImplementedError — a deployment swaps a PIL / libvips decode
+    call into the same batch kernel, the Spark plan is identical.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -502,12 +492,9 @@ def image_features(
                 elif is_png(data):
                     w, h, gray = decode_png(data)
                     gray8 = _pool8(gray)
-                elif is_jpeg(data):
-                    w, h, gray = decode_jpeg(data)
-                    gray8 = _pool8(gray)
                 else:
                     raise NotImplementedError(
-                        "image decoding beyond BMP/PNG/baseline-JPEG "
+                        "image decoding beyond BMP/PNG "
                         "requires PIL/libvips (not in this container); "
                         "pass fake=True for the deterministic stub"
                     )
@@ -678,9 +665,9 @@ def resize_images(
     aligned with the input scan — mapInPandas preserves partitioning, so
     no shuffle anywhere.
 
-    Real path (fake=False): BMP in -> nearest-neighbor resample of the
-    grayscale plane -> 24-bit BMP out, all pure NumPy; other formats
-    raise."""
+    Real path (fake=False): BMP or PNG in -> nearest-neighbor resample
+    of the grayscale plane -> the same format out, all pure NumPy; other
+    formats raise."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -706,14 +693,9 @@ def resize_images(
                     body = encode_png(
                         _resample_nearest(gray, target_h, target_w)
                     )
-                elif is_jpeg(data):
-                    _, _, gray = decode_jpeg(data)
-                    body = encode_jpeg(
-                        _resample_nearest(gray, target_h, target_w)
-                    )
                 else:
                     raise NotImplementedError(
-                        "resizing beyond BMP/PNG/baseline-JPEG requires "
+                        "resizing beyond BMP/PNG requires "
                         "PIL/libvips (not in this container); pass "
                         "fake=True for the deterministic stub"
                     )

@@ -54,6 +54,12 @@ STAGES = ("pages_meta", "signatures", "pairs", "clusters", "actions")
 
 META_RULES = ("more-meta", "less-meta")
 
+# Decontamination drop lists above this row count skip the forced
+# broadcast anti-join and shuffle instead — a heavily contaminated corpus
+# (or a tiny n) can produce a drop list far beyond driver/executor
+# broadcast budget.
+DECONTAMINATE_MAX_BROADCAST_DROPS = 2_000_000
+
 
 def config_fingerprint(cfg: DedupConfig) -> str:
     """Stable hash of every tunable — the resume-safety stamp."""
@@ -315,7 +321,7 @@ def run_dedup_pipeline(
         # low n) can yield a drop list far beyond broadcast budget — above
         # the gate, fall back to a plain shuffle anti-join instead of OOMing
         # the driver on a forced broadcast (ADVICE r4)
-        if n_drop <= cfg.decontaminate_max_broadcast_drops:
+        if n_drop <= DECONTAMINATE_MAX_BROADCAST_DROPS:
             hashed = hashed.join(F.broadcast(drops), "url", "left_anti")
         else:
             hashed = hashed.join(drops, "url", "left_anti")

@@ -763,42 +763,3 @@ def test_cc_local_contract_equals_plain(spark):
     assert s_on["converged"] and s_off["converged"]
     # the pre-pass must not take MORE rounds than the plain path
     assert s_on["rounds"] <= s_off["rounds"]
-
-
-def test_image_features_real_jpeg_decode(spark):
-    """The real (fake=False) path decodes actual baseline JPEG bytes
-    (pure-NumPy codec, operators/jpeg.py): dimensions from SOF0, phash
-    stable for identical payloads and (on structured images) matching the
-    phash of the losslessly-coded same pixels."""
-    from py_image_dedup_spark.operators.jpeg import encode_jpeg
-    from py_image_dedup_spark.operators.multimodal import encode_bmp
-
-    y, x = np.mgrid[0:24, 0:32]
-    img = ((x * 8 + y * 4) % 256).astype(np.float64)
-    jpg = encode_jpeg(img, quality=95)
-    df = spark.createDataFrame(
-        [("j", jpg), ("j2", jpg), ("bmp", encode_bmp(img.astype(np.uint8)))],
-        "url string, payload binary",
-    )
-    got = {r["url"]: r for r in image_features(df, fake=False).collect()}
-    assert got["j"]["width"] == 32 and got["j"]["height"] == 24
-    assert got["j"]["n_bytes"] == len(jpg)
-    assert got["j"]["phash"] == got["j2"]["phash"]
-    # q=95 on a smooth ramp: perceptual hash agrees with the lossless path
-    assert got["j"]["phash"] == got["bmp"]["phash"]
-
-
-def test_resize_images_real_jpeg_roundtrip(spark):
-    from py_image_dedup_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from py_image_dedup_spark.operators.multimodal import resize_images
-
-    grad = np.tile(np.arange(32, dtype=np.float64) * 8, (16, 1))
-    df = spark.createDataFrame(
-        [("g", encode_jpeg(grad, 95))], "url string, payload binary"
-    )
-    out = resize_images(df, 8, 4, fake=False).collect()[0]
-    assert (out["width"], out["height"]) == (8, 4)
-    w, h, gray = decode_jpeg(bytes(out["payload"]))
-    assert (w, h) == (8, 4)
-    # a horizontal ramp survives resize + requantization monotonically
-    assert np.all(np.diff(gray.mean(axis=0)) > 0)
