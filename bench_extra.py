@@ -13,7 +13,6 @@ Usage:
 
 from __future__ import annotations
 
-import dataclasses
 import json
 import os
 import shutil
@@ -24,6 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from py_image_dedup_spark.config import DedupConfig
+from py_image_dedup_spark.operators import components
 from py_image_dedup_spark.plans.pipeline import explain_str, run_dedup_pipeline
 from py_image_dedup_spark.session import build_session
 
@@ -135,10 +135,11 @@ def _one_pipeline(spark, pages, cfg) -> dict:
     return rep
 
 
-# knobs the ab runner can flip: env-var knobs toggle os.environ; cfg knobs
-# build a DedupConfig override per side (0 = off/A, 1 = on/B)
-_CFG_KNOBS = {
-    "CC_SINGLE_TASK": lambda v: {"cc_single_task_edges": 1_000_000 if v == "1" else 0},
+# knobs the ab runner can flip: env-var knobs toggle os.environ; module
+# constants are patched per side (0 = off/A, 1 = on/B)
+_CONST_KNOBS = {
+    "CC_SINGLE_TASK": (components, "SINGLE_TASK_EDGES",
+                       {"0": 0, "1": 1_000_000}),
 }
 
 
@@ -158,8 +159,10 @@ def run_ab(knob: str, cycles: int = 3) -> None:
     res: dict[str, list[dict]] = {"0": [], "1": []}
     for c in range(cycles):
         for val in ("0", "1"):
-            if knob in _CFG_KNOBS:
-                run_cfg = dataclasses.replace(cfg, **_CFG_KNOBS[knob](val))
+            if knob in _CONST_KNOBS:
+                module, name, values = _CONST_KNOBS[knob]
+                setattr(module, name, values[val])
+                run_cfg = cfg
             elif knob == "AQE_SHJ":
                 spark.conf.set(
                     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

@@ -106,20 +106,6 @@ class DedupConfig:
     # n_salts partitions (A-side salted by url hash, B-side replicated).
     salt_threshold: int = 64
     n_salts: int = 16
-    # Clusters-stage single-task tier: when the committed pair-edge count
-    # is at or below this, the clusters stage runs ONE NumPy union-find
-    # task (operators/components.single_task_components) whose rep-level
-    # (uid, cluster_id, dist, score) rows are broadcast into the rep map,
-    # instead of driver-serial large-star/small-star rounds and their
-    # joins (row-identical). One-off at the cut (clusters stage alone,
-    # local[4], 4-vCPU VM, one run each, single task vs distributed):
-    #   1M random edges over 600k reps: 3.8 vs 17.6 s (5 rounds); kernel
-    #     worker VmHWM 269 MB (87 MB before the kernel); broadcast 578,520
-    #     rows, 64 MiB hash relation;
-    #   100k-vertex shuffled chain: 2.0 vs 13.1 s (14 rounds); VmHWM
-    #     136 MB; broadcast 100,000 rows, 12 MiB.
-    # Far below any 100 TB pair table, which takes the distributed rounds.
-    cc_single_task_edges: int = 1_000_000
     # When set, run_dedup_pipeline pins spark.sql.shuffle.partitions for its
     # stages (AQE still coalesces down at runtime). None = inherit session.
     # Partition count is a DATA-size knob, not a core-count knob: the scaling

@@ -18,7 +18,10 @@ loop), it does in order:
      deduped per chunk of raw pairs;
   5. verify: every row carrying uid_a against every row carrying uid_b
      (a uid collision joins like it does in Spark), dist = min over the
-     signature columns of 1 - fraction of agreeing positions.
+     signature columns of 1 - fraction of agreeing positions; a pair that
+     hits in every band is dist 0.0 without the check, like the
+     distributed tier's full-band short-circuit (operators/modes.py:
+     minhash_pairs).
 
 Row-identical to the distributed tier: the uid, source key and band-hash
 array arrive computed by the same JVM expressions, and the arithmetic is
@@ -35,9 +38,11 @@ import pyarrow.compute as pc
 
 OUT_SCHEMA = (
     "url_a string, url_b string, dist double, score double, "
-    "hot_buckets long, hot_bucket_rows long, warm_buckets long"
+    "hot_buckets long, hot_bucket_rows long, warm_buckets long, "
+    "full_band_pairs long"
 )
-STAT_COLS = ("hot_buckets", "hot_bucket_rows", "warm_buckets")
+STAT_COLS = ("hot_buckets", "hot_bucket_rows", "warm_buckets",
+             "full_band_pairs")
 
 # raw ordered row pairs (and verified row pairs) one vectorised step holds
 _CHUNK = 1 << 22
@@ -146,18 +151,17 @@ def _stats_row(*stats) -> pa.RecordBatch:
 
 
 def pairs_kernel(sig_cols: tuple, max_dist: float, bucket_cap: int,
-                 salt_threshold: int, scoped: bool, full_band: bool):
+                 salt_threshold: int, scoped: bool):
     """The mapInArrow function. Input columns: uid, url, new, bands
     (array<long>), every `sig_cols` column, and src when `scoped`. Emits
     OUT_SCHEMA: the verified pairs with null stat columns, then one row
-    of hot/warm bucket counts with null pair columns. `full_band` applies
-    minhash_pairs' short-circuit: a pair hitting in every band is dist 0.0
-    without verification."""
+    of STAT_COLS counts (hot/warm buckets, full-band uid pairs) with null
+    pair columns."""
 
     def kernel(batches: Iterator[pa.RecordBatch]):
         batches = list(batches)
         if not sum(b.num_rows for b in batches):
-            yield _stats_row(0, 0, 0)
+            yield _stats_row(0, 0, 0, 0)
             return
         table = pa.Table.from_batches(batches)
         uid = table["uid"].to_numpy()
@@ -188,15 +192,14 @@ def pairs_kernel(sig_cols: tuple, max_dist: float, bucket_cap: int,
         lo, hi, score = _candidates(
             uid, new, bucket_rows, starts[keep], sizes[keep]
         )
+        stats += (int((score >= n_bands).sum()),)
         pi, ra, rb = _row_pairs(uid, lo, hi)
         sigs = [_matrix(table[c], np.int32) for c in sig_cols]
         dist = _dists(sigs, ra, rb)
         score = score[pi].astype(np.float64)
-        ok = dist <= max_dist
-        if full_band:
-            full = score >= n_bands
-            dist[full] = 0.0
-            ok |= full
+        full = score >= n_bands
+        dist[full] = 0.0
+        ok = (dist <= max_dist) | full
         url = table["url"].combine_chunks().cast(pa.string())
         a = url.take(pa.array(ra[ok]))
         b = url.take(pa.array(rb[ok]))

@@ -194,7 +194,7 @@ def connected_components(
     instead — the same component_min union-find over the whole list in
     one task, no driver-serial rounds. The pipeline's clusters stage
     picks it from the pairs stage's committed row count
-    (DedupConfig.cc_single_task_edges); the label is the same component
+    (SINGLE_TASK_EDGES); the label is the same component
     minimum, so the tiers agree row for row (pytest asserts it on random
     multigraphs and a long chain).
     """
@@ -241,6 +241,21 @@ def connected_components(
         out = out.union(singles)
     return out
 
+
+# Clusters-stage single-task tier: when the committed pair-edge count is
+# at or below this, the pipeline's clusters stage runs ONE NumPy
+# union-find task (single_task_components) whose rep-level (uid,
+# cluster_id, dist, score) rows are broadcast into the rep map, instead of
+# driver-serial large-star/small-star rounds and their joins
+# (row-identical). One-off at the cut (clusters stage alone, local[4],
+# 4-vCPU VM, one run each, single task vs distributed):
+#   1M random edges over 600k reps: 3.8 vs 17.6 s (5 rounds); kernel
+#     worker VmHWM 269 MB (87 MB before the kernel); broadcast 578,520
+#     rows, 64 MiB hash relation;
+#   100k-vertex shuffled chain: 2.0 vs 13.1 s (14 rounds); VmHWM
+#     136 MB; broadcast 100,000 rows, 12 MiB.
+# Far below any 100 TB pair table, which takes the distributed rounds.
+SINGLE_TASK_EDGES = 1_000_000
 
 SINGLE_TASK_SCHEMA = "uid long, cluster_id long, dist double, score double"
 

@@ -6,26 +6,31 @@ elasticsearchstorebackend.py:209-222): image-match stores fixed-width
 signature "words" in ES and any shared word makes a candidate; here the
 signature is MinHash and the words are LSH bands.
 
-Two physical tiers, one semantic — the same (url_a, url_b, dist, score)
-rows, hash collisions included, chosen by the band-row count when the
-caller knows it (operators/modes.py:SINGLE_TASK_BAND_ROWS):
+One pairs step, operators/modes.py:minhash_pairs, serves the batch
+pipeline, the driver queries and the incremental stream. It has two
+physical tiers with one semantic — the same (url_a, url_b, dist, score)
+rows, hash collisions and the full-band short-circuit included — chosen by
+the signature-row count when the caller knows it (band rows at or under
+operators/modes.py:SINGLE_TASK_BAND_ROWS take the single-task tier):
 
   distributed (large or unknown input; one plan, no driver loop):
-    signatures --explode bands--> (url, band_id, band_hash)
+    signatures --explode bands--> (url, band_id, band_hash[, new])
       --band_join (operators/modes.py): bucket sizes joined onto the band
         rows, capped + salted self-join on (band_id, band_hash) over uids-->
       --groupBy pair (score = #shared bands)--> candidate (uid_a, uid_b)
-      --join back signatures x2, est Jaccard--> verified url pairs
-        (dist <= max_dist)
+      --pair_rows: join back signatures x2, est Jaccard--> verified url
+        pairs (dist <= max_dist)
   single-task (small input: ~2 jobs instead of ~10-25):
     signatures + band_hash_array --coalesce(1) mapInArrow--> the NumPy
       kernel functions/band_pairs.py buckets, caps, enumerates, scores and
       verifies in one task (operators/modes.py:single_task_pairs)
 
 Both tiers take uid = xxhash64(url), the source key and the band hashes
-from the same JVM expressions (band_hash_array here). The batch pipeline
-and the incremental stream run both tiers; the stream adds its store side
-as join-only rows so a pair needs at least one new doc.
+from the same JVM expressions (band_hash_array here). The stream's
+signature view carries a boolean `new` column: untagged rows (new = false)
+count toward bucket sizes but pair only with new ones, so every pair has
+at least one new doc. Every mode's verify maps uid pairs back to rows
+through the one pair_rows join.
 
 Scale notes (north_rule):
  * The band self-join shuffles on (band_id, band_hash) — the natural key;
@@ -97,14 +102,58 @@ def band_hash_array(columns, cfg: DedupConfig):
 
 
 def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(url, sig[, sig_v_<variant>..]) -> (url, band_id, band_hash): one row
-    per entry of band_hash_array, band_id = its position — ~(1+v)x band
-    rows with v variants, no extra shuffle."""
+    """(url, sig[, sig_v_<variant>..][, new]) -> (url, band_id, band_hash
+    [, new]): one row per entry of band_hash_array, band_id = its position
+    — ~(1+v)x band rows with v variants, no extra shuffle. A `new` tag (the
+    stream's view) rides along for band_join."""
+    new = ["new"] if "new" in signatures.columns else []
     return signatures.select(
-        "url",
+        "url", *new,
         F.posexplode(band_hash_array(signatures.columns, cfg)).alias(
             "band_id", "band_hash"
         ),
+    )
+
+
+def pair_rows(pairs: DataFrame, rows: DataFrame, cols: tuple = (),
+              broadcast: bool = False) -> DataFrame:
+    """The one uid->row join of every verify: (uid_a, uid_b, score) pairs
+    get each side's row of `rows`, keyed uid = xxhash64(url) (the compact
+    key band_join shuffles instead of url strings), as url_a / url_b and
+    {c}_a / {c}_b for every c in `cols`.
+
+    Two physical shapes (the caller picks by MEASURED pair count):
+      broadcast=True   the pair list rides as a broadcast into two
+                       shuffle-free probes of `rows` (one scan each, rows
+                       NEVER shuffled), then the two halves — pair-count
+                       sized, not corpus-sized — merge on the pair key.
+                       Right whenever pairs << corpus.
+      broadcast=False  plain two-step shuffle join — the safe shape when
+                       the pair list itself is huge."""
+    keyed = rows.select(F.xxhash64("url").alias("uid"), "url", *cols)
+
+    def side(s: str) -> DataFrame:
+        return keyed.select(F.col("uid").alias(f"uid_{s}"),
+                            *[F.col(c).alias(f"{c}_{s}")
+                              for c in ("url", *cols)])
+
+    if broadcast:
+        ja = side("a").join(
+            F.broadcast(pairs.select("uid_a", "uid_b", "score")), "uid_a"
+        )
+        jb = side("b").join(F.broadcast(pairs.select("uid_a", "uid_b")),
+                            "uid_b")
+        return ja.join(jb, ["uid_a", "uid_b"])
+    return pairs.join(side("a"), "uid_a").join(side("b"), "uid_b")
+
+
+def url_pairs(joined: DataFrame) -> DataFrame:
+    """pair_rows output with a `dist` column -> the pairs contract
+    (url_a, url_b, dist, score), canonicalized url_a < url_b."""
+    return joined.select(
+        F.least("url_a", "url_b").alias("url_a"),
+        F.greatest("url_a", "url_b").alias("url_b"),
+        "dist", "score",
     )
 
 
@@ -112,94 +161,20 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                  cfg: DedupConfig, broadcast_pairs: bool = False,
                  sig_cols: tuple = ("sig",)) -> DataFrame:
     """Exact re-check at the signature level: dist = 1 - estimated Jaccard
-    (fraction of agreeing positions); keep dist <= max_dist. Mirrors the
+    (fraction of agreeing positions), MIN across normalization variants
+    (the reference's best-orientation semantic: a duplicate under ANY
+    canonical form matches); keep dist <= max_dist. Mirrors the
     reference's distance_cutoff filter (elasticsearchstorebackend.py:55,86).
-
-    Pairs are keyed by uid — the compact 8-byte xxhash64(url) the band
-    join shuffles instead of url strings (operators/modes.py:band_join);
-    the signature probe recovers url alongside sig, so the output is url
-    pairs, canonicalized url_a < url_b.
-
-    Two physical shapes (caller picks by MEASURED pair count — pairs come
-    out of a materialized checkpoint, so counting is cheap):
-      broadcast_pairs=True   the pair list rides as a broadcast into two
-                             shuffle-free probes of the signature table
-                             (one scan each, signatures NEVER shuffled),
-                             then the two sig-carrying halves — pair-count
-                             sized, not corpus-sized — merge on the pair
-                             key. Right whenever pairs << corpus.
-      broadcast_pairs=False  plain two-step shuffle join — the safe shape
-                             when the pair list itself is huge.
-    """
-    cols = list(sig_cols)
-    sigs = signatures.select(F.xxhash64("url").alias("uid"), "url", *cols)
-    sa = sigs.select(
-        F.col("uid").alias("uid_a"), F.col("url").alias("url_a"),
-        *[F.col(c).alias(f"{c}_a") for c in cols],
-    )
-    sb = sigs.select(
-        F.col("uid").alias("uid_b"), F.col("url").alias("url_b"),
-        *[F.col(c).alias(f"{c}_b") for c in cols],
-    )
-    if broadcast_pairs:
-        ja = sa.join(F.broadcast(pairs.select("uid_a", "uid_b", "score")),
-                     "uid_a")
-        jb = sb.join(F.broadcast(pairs.select("uid_a", "uid_b")), "uid_b")
-        joined = ja.join(jb, ["uid_a", "uid_b"])
-    else:
-        joined = pairs.join(sa, "uid_a").join(sb, "uid_b")
-    # dist = MIN across normalization variants (the reference's best-
-    # orientation semantic: a duplicate under ANY canonical form matches)
+    `broadcast_pairs` picks pair_rows' shape."""
+    joined = pair_rows(pairs, signatures, sig_cols, broadcast_pairs)
     dists = [
         F.lit(1.0) - est_jaccard_col(F.col(f"{c}_a"), F.col(f"{c}_b"))
-        for c in cols
+        for c in sig_cols
     ]
     dist = F.least(*dists) if len(dists) > 1 else dists[0]
-    return (
+    return url_pairs(
         joined.withColumn("dist", dist)
         .where(F.col("dist") <= F.lit(float(cfg.max_dist)))
-        .select(
-            F.least("url_a", "url_b").alias("url_a"),
-            F.greatest("url_a", "url_b").alias("url_b"),
-            "dist", "score",
-        )
-    )
-
-
-def resolve_pair_urls(pairs: DataFrame, signatures: DataFrame,
-                      broadcast_pairs: bool = False,
-                      dist: float = 0.0) -> DataFrame:
-    """(uid_a, uid_b, score) -> (url_a, url_b, dist, score) with a CONSTANT
-    dist — the full-band-agreement short-circuit target (operators/modes.py
-    minhash_pairs): pairs whose score equals cfg.lsh_bands matched in every
-    band, so every signature slice is equal (an xxhash64 slice collision in
-    ALL bands at once is ~2^-64·per-band — and would only emit an extra
-    dist-0 pair, the same conservative direction as a uid collision), est
-    Jaccard is exactly 1 and dist exactly 0 — verification always passes.
-    These are the DENSEST pairs (most-duplicated content), so skipping the
-    sig-carrying probes for them cuts the verify stage's shuffle bytes
-    where they concentrate; this join moves only (uid, url) rows.
-
-    Same two physical shapes as verify_pairs, picked by the caller from
-    the measured pair count."""
-    ma = signatures.select(
-        F.xxhash64("url").alias("uid_a"), F.col("url").alias("url_a")
-    )
-    mb = signatures.select(
-        F.xxhash64("url").alias("uid_b"), F.col("url").alias("url_b")
-    )
-    if broadcast_pairs:
-        ja = ma.join(F.broadcast(pairs.select("uid_a", "uid_b", "score")),
-                     "uid_a")
-        jb = mb.join(F.broadcast(pairs.select("uid_a", "uid_b")), "uid_b")
-        joined = ja.join(jb, ["uid_a", "uid_b"])
-    else:
-        joined = pairs.join(ma, "uid_a").join(mb, "uid_b")
-    return joined.select(
-        F.least("url_a", "url_b").alias("url_a"),
-        F.greatest("url_a", "url_b").alias("url_b"),
-        F.lit(float(dist)).alias("dist"),
-        "score",
     )
 
 

@@ -39,26 +39,25 @@ def source_of(url, cfg: DedupConfig):
 
 
 def band_join(bands: DataFrame, cfg: DedupConfig,
-              store: DataFrame | None = None,
               stats: dict | None = None) -> DataFrame:
-    """The engine's one band/bucket self-join, shared by batch and stream;
+    """The engine's one band/bucket self-join, shared by every mode;
     returns (uid_a, uid_b, score = #shared buckets) with uid_a < uid_b,
     uid = xxhash64(url).
 
     This is the DISTRIBUTED tier. For MinHash inputs whose band-row count
-    is known and at most SINGLE_TASK_BAND_ROWS, minhash_pairs and the
-    stream's incremental_pairs run single_task_pairs instead: the same
-    bucketing, cap, pair condition, score and verification in one NumPy
-    task, row-identical output. Simhash and substring always run this
-    join.
+    is known and at most SINGLE_TASK_BAND_ROWS, minhash_pairs runs
+    single_task_pairs instead: the same bucketing, cap, pair condition,
+    score and verification in one NumPy task, row-identical output.
+    Simhash and substring always run this join.
 
-    `bands` (url, band_id, band_hash) are the NEW docs' band rows. `store`,
-    same columns, holds band rows of docs whose pairs were emitted before
-    (the stream's stored signatures, banded and cut to the buckets the new
-    docs touch; it must not hold any url of `bands`). Store rows count
-    toward bucket sizes but only ever join as the B side, so every pair
-    has at least one new side: O(new x bucket) work per bucket, not
-    O(bucket^2). Batch passes no store and gets the plain self-join.
+    `bands` are (url, band_id, band_hash) rows with an optional boolean
+    `new` column (the stream's tagged view; explode_bands carries it).
+    Untagged input is all new: the plain self-join. Tagged rows with
+    new = false (docs whose pairs were emitted before) are first cut to
+    the buckets a new row touches — a broadcast semi-join of the new rows'
+    (band_id, band_hash), sized by the new rows — then count toward bucket
+    sizes but only ever join as the B side, so every pair has at least one
+    new side: O(new x bucket) work per bucket, not O(bucket^2).
 
     The join shuffles COMPACT 8-byte uids, not ~60-byte url strings — at
     32-48 band rows per doc that cuts band-table and pair-agg shuffle bytes
@@ -84,17 +83,20 @@ def band_join(bands: DataFrame, cfg: DedupConfig,
                                hot-bucket metrics), AQE skew-join mops up
                                residual imbalance
 
-    Lazy: the caller owns materialisation (batch checkpoints the pair
-    table it probes three times; a micro-batch writes it once). `stats`,
-    if given, receives the hot-bucket report at the cost of one job over
-    the bucket-size table.
+    Lazy: the caller owns materialisation (minhash_pairs checkpoints the
+    pair table it probes three times). `stats`, if given, receives the
+    hot-bucket report at the cost of one job over the bucket-size table.
     """
     keys = ["band_id", "band_hash"]
-    rows = bands.select("url", *keys, F.lit(True).alias("new"))
-    if store is not None:
-        rows = rows.unionByName(
-            store.select("url", *keys, F.lit(False).alias("new"))
+    if "new" in bands.columns:
+        fresh = bands.where("new")
+        rows = fresh.select("url", *keys, "new").unionByName(
+            bands.where("NOT new")
+            .join(F.broadcast(fresh.select(*keys)), keys, "left_semi")
+            .select("url", *keys, "new")
         )
+    else:
+        rows = bands.select("url", *keys, F.lit(True).alias("new"))
     src = []
     if not cfg.across_sources:
         src = [source_of(F.col("url"), cfg).alias("_src")]
@@ -260,22 +262,22 @@ BROADCAST_PAIRS_LIMIT = 500_000
 
 
 def single_task_pairs(sigs: DataFrame, cfg: DedupConfig,
-                      stats: dict | None = None,
-                      full_band: bool = False) -> DataFrame:
+                      stats: dict | None = None) -> DataFrame:
     """band_join + verify_pairs in ONE task: every signature row flows
     through coalesce(1) into the NumPy kernel functions/band_pairs.py,
     which buckets, caps, enumerates, scores and verifies in place. Same
-    contract and rows as the distributed tier (url_a, url_b, dist, score)
-    — the kernel gets uid, source key and band hashes from the JVM
-    expressions that tier uses. Salting is moot inside one task.
+    contract and rows as the distributed tier (url_a, url_b, dist, score),
+    the full-band short-circuit included — the kernel gets uid, source key
+    and band hashes from the JVM expressions that tier uses. Salting is
+    moot inside one task.
 
     A boolean `new` column in `sigs` (the stream's tagged signature view)
-    marks the rows a pair must include; store rows (new = false) count
+    marks the rows a pair must include; untagged rows (new = false) count
     toward bucket sizes and join only against new ones. Without it every
-    row is new (batch). `full_band` is minhash_pairs' full-band
-    short-circuit. `stats`, if given, gets single_task=True now and an
-    Observation under "observation" whose hot_buckets / hot_bucket_rows /
-    warm_buckets land when the caller's one write runs (no extra job)."""
+    row is new (batch). `stats`, if given, gets single_task=True now and an
+    Observation under "observation" whose STAT_COLS (hot_buckets,
+    hot_bucket_rows, warm_buckets, full_band_pairs) land when the caller's
+    one write runs (no extra job)."""
     from pyspark.sql import Observation
 
     from py_image_dedup_spark.functions.band_pairs import (
@@ -293,7 +295,7 @@ def single_task_pairs(sigs: DataFrame, cfg: DedupConfig,
     )
     out = rows.coalesce(1).mapInArrow(
         pairs_kernel(sig_cols, float(cfg.max_dist), cfg.bucket_cap,
-                     cfg.salt_threshold, bool(src), full_band),
+                     cfg.salt_threshold, bool(src)),
         OUT_SCHEMA,
     )
     if stats is not None:
@@ -309,11 +311,13 @@ def single_task_pairs(sigs: DataFrame, cfg: DedupConfig,
 def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
                   stats: dict | None = None,
                   known_rows: int | None = None) -> DataFrame:
-    """Verified pairs over `signatures`. `known_rows`, the signature row
-    count when the caller already measured it, picks the tier: band rows
-    (rows x band columns) at or under SINGLE_TASK_BAND_ROWS run
-    single_task_pairs, anything else (or unknown) the distributed
-    band_join + verify_pairs below."""
+    """The one MinHash pairs step — batch, driver queries and the stream:
+    verified pairs over `signatures`, honouring an optional `new` tag (see
+    band_join). `known_rows`, the signature row count (or an upper bound)
+    when the caller already measured it, picks the tier: band rows (rows x
+    band columns) at or under SINGLE_TASK_BAND_ROWS run single_task_pairs,
+    anything else (or unknown) the distributed band_join + verify_pairs
+    below."""
     # variant sig columns actually present (a store written without
     # variants verifies on "sig" alone even if cfg now asks for variants)
     sig_cols = ("sig",) + _minhash.variant_sig_cols(
@@ -321,19 +325,20 @@ def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
     )
     n_bands = cfg.lsh_bands * len(sig_cols)
     if single_task_tier(None if known_rows is None else known_rows * n_bands):
-        return single_task_pairs(signatures, cfg, stats=stats,
-                                 full_band=True)
+        return single_task_pairs(signatures, cfg, stats=stats)
     bands = _minhash.explode_bands(signatures, cfg)
     # materialized once: the size probe and both verify branches read it
     pairs = band_join(bands, cfg, stats=stats).localCheckpoint(eager=True)
     # Full-band-agreement short-circuit: a pair can share at most one
     # bucket per band, so score == n_total_bands means EVERY band of EVERY
-    # variant matched => every signature slice equal => est Jaccard exactly
-    # 1 => dist exactly 0 — verification always passes. Those pairs (the
-    # densest: verbatim re-crawl mass that survived url-level dedup) bypass
-    # both sig-carrying probes and resolve uid->url through a slim map join
-    # instead. Output is provably identical to verifying them (dist 0.0
-    # either way).
+    # variant matched => every signature slice equal (an xxhash64 slice
+    # collision in ALL bands at once would only add a dist-0 pair, the
+    # same conservative direction as a uid collision) => est Jaccard
+    # exactly 1 => dist exactly 0 — verification always passes. Those
+    # pairs (the densest: verbatim re-crawl mass that survived url-level
+    # dedup) bypass both sig-carrying probes and resolve uid->url through
+    # a slim (uid, url) join instead. Output is provably identical to
+    # verifying them (dist 0.0 either way).
     b = F.lit(float(n_bands))
     # ONE cheap agg job over the checkpointed pairs sizes both subsets, and
     # each picks the shape that never shuffles the signature table when its
@@ -353,11 +358,11 @@ def minhash_pairs(signatures: DataFrame, cfg: DedupConfig,
     )
     if n_full == 0:
         return verified
-    resolved = _minhash.resolve_pair_urls(
+    resolved = _minhash.pair_rows(
         pairs.where(F.col("score") >= b), signatures,
-        broadcast_pairs=n_full <= BROADCAST_PAIRS_LIMIT,
-    )
-    return verified.unionByName(resolved)
+        broadcast=n_full <= BROADCAST_PAIRS_LIMIT,
+    ).withColumn("dist", F.lit(0.0))
+    return verified.unionByName(_minhash.url_pairs(resolved))
 
 
 # ---------------------------------------------------------------- simhash
@@ -376,29 +381,13 @@ def simhash_pairs(signatures: DataFrame, cfg: DedupConfig,
         F.explode(simhash_blocks(F.col("simhash"), n_blocks)).alias("b"),
     ).select("url", "b.band_id", "b.band_hash")
     pairs = band_join(bands, cfg, stats=stats)
-    sh = signatures.withColumn("uid", F.xxhash64("url")).select(
-        "uid", "url", "simhash"
+    joined = _minhash.pair_rows(pairs, signatures, ("simhash",))
+    dist = hamming_col(F.col("simhash_a"), F.col("simhash_b")) / F.lit(
+        float(SIMHASH_BITS)
     )
-    joined = (
-        pairs.join(
-            sh.select(F.col("uid").alias("uid_a"), F.col("url").alias("url_a"),
-                      F.col("simhash").alias("h_a")),
-            "uid_a",
-        ).join(
-            sh.select(F.col("uid").alias("uid_b"), F.col("url").alias("url_b"),
-                      F.col("simhash").alias("h_b")),
-            "uid_b",
-        )
-    )
-    dist = hamming_col(F.col("h_a"), F.col("h_b")) / F.lit(float(SIMHASH_BITS))
-    return (
+    return _minhash.url_pairs(
         joined.withColumn("dist", dist)
         .where(F.col("dist") <= F.lit(float(cfg.max_dist)))
-        .select(
-            F.least("url_a", "url_b").alias("url_a"),
-            F.greatest("url_a", "url_b").alias("url_b"),
-            "dist", "score",
-        )
     )
 
 
@@ -427,28 +416,15 @@ def substring_pairs(signatures: DataFrame, cfg: DedupConfig,
         "url", F.posexplode("sub_keys").alias("band_id", "band_hash")
     ).withColumn("band_id", F.lit(0))  # key identity is the bucket
     pairs = band_join(bands, cfg, stats=stats)
-    sizes = signatures.withColumn("uid", F.xxhash64("url")).select(
-        "uid", "url", F.size("sub_keys").alias("nk")
-    )
-    joined = (
-        pairs.join(sizes.select(F.col("uid").alias("uid_a"),
-                                F.col("url").alias("url_a"),
-                                F.col("nk").alias("nk_a")), "uid_a")
-        .join(sizes.select(F.col("uid").alias("uid_b"),
-                           F.col("url").alias("url_b"),
-                           F.col("nk").alias("nk_b")), "uid_b")
+    joined = _minhash.pair_rows(
+        pairs, signatures.withColumn("nk", F.size("sub_keys")), ("nk",)
     )
     containment = F.col("score") / F.least(F.col("nk_a"), F.col("nk_b"))
-    return (
+    return _minhash.url_pairs(
         joined.withColumn("dist", F.lit(1.0) - containment)
         .where(
             (F.col("dist") <= F.lit(float(cfg.max_dist)))
             & (F.col("score") >= cfg.min_shared_keys)
-        )
-        .select(
-            F.least("url_a", "url_b").alias("url_a"),
-            F.greatest("url_a", "url_b").alias("url_b"),
-            "dist", "score",
         )
     )
 

@@ -14,11 +14,12 @@ Stages:
   3 pairs        LSH band self-join + verification (J1)
   4 clusters     connected components over pair edges (compact int64
                  uids): while the committed pair count fits one task
-                 (cc_single_task_edges), one NumPy union-find task emits
-                 rep-level cluster ids + min dist / max score, broadcast
-                 into the rep map; above it, distributed large-star/
-                 small-star rounds. Fanned back out to all exact-dup
-                 members WITH the policy input columns attached (A2)
+                 (components.SINGLE_TASK_EDGES), one NumPy union-find
+                 task emits rep-level cluster ids + min dist / max
+                 score, broadcast into the rep map; above it,
+                 distributed large-star/small-star rounds. Fanned back
+                 out to all exact-dup members WITH the policy input
+                 columns attached (A2)
   5 actions      keep-best-copy window selection (O1-O4) — zero joins,
                  one window shuffle
   6 metrics      per-stage row counts + durations + hot-bucket report (A5)
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
 from py_image_dedup_spark.functions.normalize import extract_meta_udf
+from py_image_dedup_spark.operators import components
 from py_image_dedup_spark.operators.components import (
     connected_components,
     single_task_components,
@@ -423,7 +425,8 @@ def run_dedup_pipeline(
         if obs is not None:  # the single-task tier's counts ride its write
             pair_stats.update(obs.get)
         # A5 hot-bucket report: skew-tier counts from the band join
-        for k in ("hot_buckets", "hot_bucket_rows", "warm_buckets"):
+        for k in ("hot_buckets", "hot_bucket_rows", "warm_buckets",
+                  "full_band_pairs"):
             if k in pair_stats:
                 metrics.append(
                     {"stage": "pairs", "metric": k,
@@ -452,7 +455,7 @@ def run_dedup_pipeline(
             "dist", "score",
         )
         n_edges = stage_rows("pairs")
-        if n_edges is not None and n_edges <= cfg.cc_single_task_edges:
+        if n_edges is not None and n_edges <= components.SINGLE_TASK_EDGES:
             # the pairs commit measured its row count (or, resumed, its
             # footers hold it) and it fits one task: one union-find emits
             # rep-level (uid, cluster_id, dist, score) for every paired

@@ -37,11 +37,9 @@ from py_image_dedup_spark.operators.exact import (
     elect_representatives_mapside,
     with_content_hash,
 )
-from py_image_dedup_spark.operators.lsh import explode_bands, verify_pairs
 from py_image_dedup_spark.operators.modes import (
-    band_join,
+    minhash_pairs,
     minhash_signatures,
-    single_task_pairs,
     single_task_tier,
 )
 from py_image_dedup_spark.sources import parquet_columns, parquet_rows
@@ -94,7 +92,7 @@ def new_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
 def incremental_pairs(
     sigs: DataFrame,
     cfg: DedupConfig,
-    band_rows: int | None = None,
+    known_rows: int | None = None,
 ) -> DataFrame:
     """The one micro-batch step: verified pairs (url_a, url_b, dist, score)
     with at least one new side — existing-vs-existing pairs were already
@@ -103,34 +101,16 @@ def incremental_pairs(
 
     `sigs` is the store's current signature view (latest_signatures over
     the log, this batch appended) with a boolean `new` column marking this
-    batch's rows; a re-upserted url is one row, tagged new.
-
-    Two tiers, one semantic (batch's minhash_pairs has the same two):
-      band_rows known and <= modes.SINGLE_TASK_BAND_ROWS
-          single_task_pairs over the tagged view, in one NumPy task.
-      otherwise
-          the store rows' bands, cut to the buckets the new docs touch,
-          join as the store side of the batch pipeline's band join
-          (operators/modes.py:band_join), so the stream gets the same
-          bucket cap and salting as batch. Verification is batch's
-          uid-keyed verify_pairs against the same view.
-    `band_rows` counts the view's band rows; an upper bound will do.
+    batch's rows; a re-upserted url is one row, tagged new. The step is
+    batch's own pairs step, operators/modes.py:minhash_pairs, over that
+    tagged view: the same two tiers, bucket cap, salting, short-circuit
+    and verify. `known_rows` counts the view's signature rows (an upper
+    bound will do) and picks the tier as it does for batch.
     """
     # variant columns cfg asks for but the store never wrote: fail loudly
     # rather than dedup without them
     _require_variant_cols(sigs.columns, cfg)
-    if single_task_tier(band_rows):
-        return single_task_pairs(sigs, cfg)
-    sig_cols = ("sig", *(f"sig_v_{n}" for n in cfg.norm_variants))
-    # computed once for its three readers below, and a plan leaf
-    sigs = sigs.localCheckpoint(eager=False)
-    new_bands = explode_bands(sigs.where("new"), cfg)
-    keys = ["band_id", "band_hash"]
-    store = explode_bands(sigs.where("NOT new"), cfg).join(
-        F.broadcast(new_bands.select(*keys)), keys, "left_semi"
-    )
-    pairs = band_join(new_bands, cfg, store=store)
-    return verify_pairs(pairs, sigs, cfg, sig_cols=sig_cols)
+    return minhash_pairs(sigs, cfg, known_rows=known_rows)
 
 
 def latest_signatures(sig_log: DataFrame) -> DataFrame:
@@ -359,18 +339,21 @@ def run_incremental_stream(
          parquet footers then bound the view's band rows with no job.
       2. read the log back (schema as just written), take its
          latest_signatures view with new = (batch_id == this batch), run
-         the one micro-batch step, incremental_pairs, on it and append the
-         verified pairs. The step takes one of batch's two tiers:
+         the one micro-batch step, incremental_pairs (batch's
+         minhash_pairs over the tagged view, given the footer row count),
+         on it and append the verified pairs. The step takes one of
+         batch's two tiers; the stream picks how its view is read:
            single-task   while that bound fits modes.SINGLE_TASK_BAND_ROWS:
                          the log read is coalesced to one partition, so
                          the view's fold and the whole tagged view's NumPy
                          kernel (operators/modes.py:single_task_pairs)
                          run as one task with no exchange
-           distributed   otherwise: the store rows' bands, cut to the
-                         buckets the new docs touch, are the store side of
-                         the batch pipeline's capped, salted band join
-                         (operators/modes.py:band_join), verified with
-                         batch's uid-keyed verify_pairs against the view.
+           distributed   otherwise: the view is a lazy localCheckpoint
+                         (computed once for its readers); the stored rows'
+                         bands, cut to the buckets the new docs touch, are
+                         the untagged side of the capped, salted band join
+                         (operators/modes.py:band_join), verified through
+                         the same uid-keyed join as batch.
     The driver then writes the batch's scan_metrics row with pyarrow (no
     job). For the same input the stream therefore emits the batch
     pipeline's pairs, hot-bucket cap included, as long as a bucket that
@@ -454,15 +437,20 @@ def run_incremental_stream(
         # the log's footer row count bounds the view from above (no job);
         # every signature row has n_bands bands
         log_rows = parquet_rows(sig_path)
-        band_rows = None if log_rows is None else log_rows * n_bands
+        single = single_task_tier(
+            None if log_rows is None else log_rows * n_bands
+        )
         log = spark.read.schema(new_sigs.schema).parquet(sig_path)
-        if single_task_tier(band_rows):
+        if single:
             # the view's fold joins the kernel's one task: no exchange
             log = log.coalesce(1)
         view = latest_signatures(log).withColumn(
             "new", F.col("batch_id") == batch_id
         )
-        incremental_pairs(view, cfg, band_rows=band_rows).write.mode(
+        if not single:
+            # computed once for the distributed tier's several readers
+            view = view.localCheckpoint(eager=False)
+        incremental_pairs(view, cfg, known_rows=log_rows).write.mode(
             "append"
         ).parquet(pairs_path)
         _write_scan_row(scan_path, batch_id, n_band_partitions)

@@ -1,7 +1,7 @@
 """The pipeline's clusters stage has two physical tiers with one semantic:
 connected_components' distributed large-star/small-star rounds, and
 single_task_components, one NumPy union-find task taken when the pairs
-stage's committed row count is at most cc_single_task_edges
+stage's committed row count is at most components.SINGLE_TASK_EDGES
 (plans/pipeline.py). Both must commit identical clusters rows per url
 (cluster_id, dist, score, policy columns) and identical actions rows.
 
@@ -20,6 +20,7 @@ import numpy as np
 import pytest
 
 from py_image_dedup_spark.config import DedupConfig
+from py_image_dedup_spark.operators import components
 from py_image_dedup_spark.operators.components import component_min
 from py_image_dedup_spark.plans.pipeline import (
     config_fingerprint,
@@ -131,7 +132,8 @@ def _commit(spark, ckpt: str, cfg: DedupConfig, graph) -> None:
 
 
 @pytest.mark.parametrize("empty", [False, True], ids=["graph", "no_pairs"])
-def test_single_task_tier_equals_distributed(spark, tmp_path, empty):
+def test_single_task_tier_equals_distributed(spark, tmp_path, monkeypatch,
+                                             empty):
     graph = _graph()
     if empty:
         graph = (graph[0], graph[1], [])
@@ -139,9 +141,10 @@ def test_single_task_tier_equals_distributed(spark, tmp_path, empty):
         [], "url string, warc_ts timestamp, text string"
     )
     got = {}
+    cfg = DedupConfig(max_dist=0.30)
     # a cut of -1 sends even an empty pair list to the distributed tier
     for cut in (1_000_000, -1):
-        cfg = DedupConfig(max_dist=0.30, cc_single_task_edges=cut)
+        monkeypatch.setattr(components, "SINGLE_TASK_EDGES", cut)
         ckpt = str(tmp_path / f"cut{cut}")
         _commit(spark, ckpt, cfg, graph)
         out = run_dedup_pipeline(spark, pages, cfg, ckpt, resume=True)

@@ -116,7 +116,7 @@ def test_single_task_tier_equals_distributed(spark, monkeypatch):
             use_tier(monkeypatch, single)
             got[single] = (
                 _rows(modes.minhash_pairs(b, cfg, known_rows=n)),
-                _rows(incremental_pairs(_view(lg), cfg, band_rows=0)),
+                _rows(incremental_pairs(_view(lg), cfg, known_rows=0)),
             )
         assert got[True][0] and got[True][1], f"{name}: no pairs"
         assert got[True] == got[False], name
@@ -139,6 +139,7 @@ def test_single_task_hot_bucket_cap_excludes_mega_buckets(spark):
         "hot_buckets": cfg.lsh_bands,
         "hot_bucket_rows": 12 * cfg.lsh_bands,
         "warm_buckets": 0,
+        "full_band_pairs": 0,
     }
 
 
@@ -164,7 +165,7 @@ def test_replayed_sig_append_emits_same_pairs(spark, monkeypatch, tmp_path):
         for single in (True, False):
             use_tier(monkeypatch, single)
             got[appends, single] = _rows(
-                incremental_pairs(view, cfg, band_rows=0)
+                incremental_pairs(view, cfg, known_rows=0)
             )
     assert got[1, True], "no pairs"
     assert all(v == got[1, True] for v in got.values())

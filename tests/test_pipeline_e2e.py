@@ -230,11 +230,16 @@ def test_metrics_emitted(spark, pages, ckpt):
     cc = {r["metric"]: r["value"] for r in rows if r["stage"] == "clusters"}
     assert cc["cc_converged"] == 1.0 and "cc_rounds" in cc
     # a 40-group corpus fits both single-task tiers; the pairs tier's
-    # hot-bucket report rides its write's Observation
+    # hot-bucket and full-band counts ride its write's Observation
     assert cc["cc_single_task"] == 1.0
     pairs = {r["metric"]: r["value"] for r in rows if r["stage"] == "pairs"}
     assert pairs["single_task"] == 1.0
-    assert {"hot_buckets", "hot_bucket_rows", "warm_buckets"} <= set(pairs)
+    assert {"hot_buckets", "hot_bucket_rows", "warm_buckets",
+            "full_band_pairs"} <= set(pairs)
+    # every full-band pair passes verification with dist 0.0
+    full = out["pairs"].where(f"score >= {CFG.lsh_bands}").collect()
+    assert pairs["full_band_pairs"] == len(full)
+    assert all(r["dist"] == 0.0 for r in full)
     # the cluster-size report rides the actions write's Observation and
     # equals the groupBy form over the committed actions
     acts = {r["metric"]: r["value"] for r in rows if r["stage"] == "actions"}
