@@ -37,7 +37,7 @@ from py_image_dedup_spark.functions.textstats import (
     token_count_col,
 )
 from py_image_dedup_spark.operators.components import connected_components
-from py_image_dedup_spark.operators.lsh import lsh_candidate_pipeline
+from py_image_dedup_spark.operators.modes import minhash_pairs, minhash_signatures
 from py_image_dedup_spark.operators.similarity import (
     brute_force_topk,
     embedding_neardup_pairs,
@@ -462,7 +462,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force is additionally pytest-gated (tests/test_minhash.py)."""
     cfg = DedupConfig(max_dist=0.5)
     d = _docs(spark, sf_dir).select("url", "norm_text")
-    return lsh_candidate_pipeline(d, cfg)
+    return minhash_pairs(minhash_signatures(d, cfg), cfg)
 
 
 def q_minhash_variants_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -475,7 +475,7 @@ def q_minhash_variants_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify semantics (_minhash_variants_sql)."""
     cfg = DedupConfig(max_dist=0.5, norm_variants=("strip_punct",))
     d = _docs(spark, sf_dir).select("url", "norm_text")
-    return lsh_candidate_pipeline(d, cfg)
+    return minhash_pairs(minhash_signatures(d, cfg), cfg)
 
 
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,23 +523,24 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh_pairs_kperm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION MinHash+LSH pipeline (lsh_candidate_pipeline: Arrow
-    kernel signatures -> capped/salted band self-join -> broadcast-or-
-    shuffle verify), fully oracle-checked: with minhash_kernel="kperm" the
-    whole signature is mod-2^64 integer arithmetic (byte-polynomial shingle
-    hash -> splitmix64 finalizer -> 16 multiply-shift permutation minima,
-    truncated to 32 bits) that the DuckDB twin recomputes bit-for-bit via
-    HUGEINT split-multiply (see _minhash_kperm_sql). Candidates = pairs
-    agreeing on a full band (band_hash equality == slice equality modulo a
-    2^-64 xxhash collision); at 500 docs <= bucket_cap no bucket is ever
-    excluded, so operator output == the SQL twin exactly. The OPH default
-    kernel rides the same pipeline and keeps its pytest recall gate."""
+    """The PRODUCTION MinHash+LSH pipeline (minhash_signatures ->
+    minhash_pairs: Arrow kernel signatures -> capped/salted band self-join
+    -> broadcast-or-shuffle verify), fully oracle-checked: with
+    minhash_kernel="kperm" the whole signature is mod-2^64 integer
+    arithmetic (byte-polynomial shingle hash -> splitmix64 finalizer -> 16
+    multiply-shift permutation minima, truncated to 32 bits) that the
+    DuckDB twin recomputes bit-for-bit via HUGEINT split-multiply (see
+    _minhash_kperm_sql). Candidates = pairs agreeing on a full band
+    (band_hash equality == slice equality modulo a 2^-64 xxhash
+    collision); at 500 docs <= bucket_cap no bucket is ever excluded, so
+    operator output == the SQL twin exactly. The OPH default kernel rides
+    the same pipeline and keeps its pytest recall gate."""
     cfg = DedupConfig(
         max_dist=0.5, minhash_kernel="kperm", num_hashes=16,
         lsh_bands=8, lsh_rows=2,
     )
     d = _docs(spark, sf_dir).select("url", "norm_text")
-    return lsh_candidate_pipeline(d, cfg)
+    return minhash_pairs(minhash_signatures(d, cfg), cfg)
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,3 +1,4 @@
 """Pipeline operators: exact dedup, LSH candidate join, connected
 components, keep-best-copy selection, decontamination, similarity
-search, multimodal plumbing (not reached by any entry point yet)."""
+search, and the BMP image codec plumbing (multimodal.py, reached by no
+entry point)."""

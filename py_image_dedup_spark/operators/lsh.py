@@ -176,16 +176,3 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
         joined.withColumn("dist", dist)
         .where(F.col("dist") <= F.lit(float(cfg.max_dist)))
     )
-
-
-def lsh_candidate_pipeline(pages_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """signatures -> verified candidate pairs in one plan. Pair generation
-    goes through the shared skew-aware join (operators/modes.py) so the
-    salting tiers apply here too."""
-    from py_image_dedup_spark.operators.modes import (
-        minhash_pairs,
-        minhash_signatures,
-    )
-
-    sigs = minhash_signatures(pages_norm, cfg)  # + cfg.norm_variants sigs
-    return minhash_pairs(sigs, cfg)

@@ -396,6 +396,15 @@ def embedding_neardup_pairs_lsh(
     )
 
 
+# semantic_dedup's cell tiers (see its docstring). Its one caller, the
+# semantic_dedup driver query, runs every cell through the plain tier; tests
+# set these to reach the salted and pivot-star tiers.
+SALT_THRESHOLD = 4096  # cells above this many rows take the salted tier
+CELL_CAP = 65536       # cells above this many rows take the pivot star
+N_SALTS = 16           # salted tier: salts per warm cell
+HOT_PIVOTS = 64        # pivot star: ~pivots per hot cell
+
+
 def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.99,
@@ -405,10 +414,6 @@ def semantic_dedup(
     centroids: np.ndarray | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt_threshold: int = 4096,
-    cell_cap: int = 65536,
-    n_salts: int = 16,
-    hot_pivots: int = 64,
     stats: dict | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -437,14 +442,14 @@ def semantic_dedup(
     three-tier logic (operators/modes.band_join), adapted to the
     fact that similarity edges need no aggregation:
 
-      size <= salt_threshold  plain within-cell self-join (exact)
-      size <= cell_cap        SALTED: A keyed by xxhash64(id) % n_salts,
+      size <= SALT_THRESHOLD  plain within-cell self-join (exact)
+      size <= CELL_CAP        SALTED: A keyed by xxhash64(id) % N_SALTS,
                               B replicated per salt — every pair scored
-                              exactly once, O(s^2) spread over n_salts
+                              exactly once, O(s^2) spread over N_SALTS
                               tasks (exact, no recall loss)
-      size >  cell_cap        PIVOT STAR: members join only ~hot_pivots
+      size >  CELL_CAP        PIVOT STAR: members join only ~HOT_PIVOTS
                               deterministic pivots (ids with
-                              xxhash64(id) % (size//hot_pivots) == 0) via
+                              xxhash64(id) % (size//HOT_PIVOTS) == 0) via
                               a BROADCAST of the pivot side — O(s·P)
                               edges, never O(s^2). A tight near-dup blob
                               (the SemDeDup pathology) stays fully
@@ -459,7 +464,7 @@ def semantic_dedup(
 
     nlist=1 degenerates to exact global near-dup + CC, which the driver
     contract exploits as a DuckDB recursive-CTE oracle (testdata cells
-    stay under salt_threshold, so the tier guard is plan-invisible
+    stay under SALT_THRESHOLD, so the tier guard is plan-invisible
     there)."""
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -484,11 +489,11 @@ def semantic_dedup(
         # per-cell sizes: at most nlist rows — a driver-side tier map
         size_rows = cells.groupBy("cell").count().collect()
         cool_c = [r["cell"] for r in size_rows
-                  if r["count"] <= salt_threshold and r["count"] <= cell_cap]
+                  if r["count"] <= SALT_THRESHOLD and r["count"] <= CELL_CAP]
         warm_c = [r["cell"] for r in size_rows
-                  if salt_threshold < r["count"] <= cell_cap]
+                  if SALT_THRESHOLD < r["count"] <= CELL_CAP]
         hot = {r["cell"]: r["count"] for r in size_rows
-               if r["count"] > cell_cap}
+               if r["count"] > CELL_CAP}
         if stats is not None:
             stats["hot_cells"] = len(hot)
             stats["warm_cells"] = len(warm_c)
@@ -519,11 +524,10 @@ def semantic_dedup(
             )
         if warm_c:
             warm = cells.where(F.col("cell").isin(warm_c))
-            ns = max(1, n_salts)
             wa = warm.select(
                 F.col(id_col).alias("_ida"), F.col("_v").alias("_va"),
                 F.col("_n").alias("_na"), "cell",
-                F.pmod(F.xxhash64(id_col), F.lit(ns).cast("long"))
+                F.pmod(F.xxhash64(id_col), F.lit(N_SALTS).cast("long"))
                 .alias("_salt"),
             )
             wb = warm.select(
@@ -531,7 +535,7 @@ def semantic_dedup(
                 F.col("_n").alias("_nb"), "cell",
                 F.explode(
                     F.sequence(F.lit(0).cast("long"),
-                               F.lit(ns - 1).cast("long"))
+                               F.lit(N_SALTS - 1).cast("long"))
                 ).alias("_salt"),
             )
             tiers.append(
@@ -543,12 +547,12 @@ def semantic_dedup(
             hot_rows = cells.where(
                 F.col("cell").isin(list(hot.keys()))
             )
-            # deterministic ~hot_pivots pivots per cell, no window, no
+            # deterministic ~HOT_PIVOTS pivots per cell, no window, no
             # sort: sampling rate from the driver-side size map
             rate = F.create_map(*[
                 x for c, s in hot.items()
                 for x in (F.lit(int(c)),
-                          F.lit(max(1, int(s) // max(1, hot_pivots))))
+                          F.lit(max(1, int(s) // HOT_PIVOTS)))
             ])
             pivots = hot_rows.where(
                 F.pmod(F.xxhash64(id_col),

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from py_image_dedup_spark.config import DedupConfig
-from py_image_dedup_spark.operators.lsh import lsh_candidate_pipeline
+from py_image_dedup_spark.operators.modes import minhash_pairs, minhash_signatures
 from py_image_dedup_spark.sources.pages import generate_pages
 from py_image_dedup_spark.streaming.incremental import (
     incremental_pairs,
@@ -43,7 +43,7 @@ def test_incremental_batch_matches_full_rerun(spark):
     )
     full = {
         (r["url_a"], r["url_b"])
-        for r in lsh_candidate_pipeline(norm_all, cfg).collect()
+        for r in minhash_pairs(minhash_signatures(norm_all, cfg), cfg).collect()
     }
     new_urls = {r["url"] for r in second.select("url").collect()}
     expected = {

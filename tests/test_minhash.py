@@ -19,9 +19,12 @@ from py_image_dedup_spark.functions.shingles import char_shingles, shingle_set_j
 from py_image_dedup_spark.operators.lsh import (
     compute_signatures,
     explode_bands,
-    lsh_candidate_pipeline,
 )
-from py_image_dedup_spark.operators.modes import band_join
+from py_image_dedup_spark.operators.modes import (
+    band_join,
+    minhash_pairs,
+    minhash_signatures,
+)
 from py_image_dedup_spark.sources.pages import generate_pages
 
 CFG = DedupConfig(max_dist=0.30)
@@ -135,7 +138,7 @@ def test_lsh_recall_vs_bruteforce(spark):
 
     got = {
         (r["url_a"], r["url_b"])
-        for r in lsh_candidate_pipeline(norm, CFG).collect()
+        for r in minhash_pairs(minhash_signatures(norm, CFG), CFG).collect()
     }
     recall = len(truth & got) / len(truth)
     assert recall >= 0.99, f"recall {recall}: missing {sorted(truth - got)[:5]}"

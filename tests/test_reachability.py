@@ -2,8 +2,8 @@
 entry point: jobs/*.py, __spark_entry__.py, scripts/check_oracles.py or
 perfbench/. A module no entry point reaches is dead code, and so is a
 top-level def/class of a reached module that no entry point or reached
-module names. Pure AST walks, no Spark. The image/audio codecs module is
-the known unreached one; KNOWN_UNREACHED and KNOWN_TEST_ONLY must match
+module names. Pure AST walks, no Spark. The image codec module is the
+known unreached one; KNOWN_UNREACHED and KNOWN_TEST_ONLY must match
 exactly, so new dead code fails and so does a stale entry."""
 
 from __future__ import annotations

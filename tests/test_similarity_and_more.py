@@ -21,7 +21,6 @@ from py_image_dedup_spark.functions.textstats import (
 )
 from py_image_dedup_spark.operators.components import connected_components
 from py_image_dedup_spark.operators.multimodal import (
-    audio_features,
     image_features,
     resize_images,
     sample_frames,
@@ -377,9 +376,11 @@ def test_image_features_stub_plumbing(spark):
 
 
 def test_image_features_real_decode_raises(spark):
-    df = spark.createDataFrame([("u", b"x")], "url string, payload binary")
-    with pytest.raises(Exception, match="NotImplementedError|image decoding"):
-        image_features(df, fake=False).collect()
+    # a PNG signature takes the same path as unknown bytes: no PNG codec
+    for payload in (b"x", b"\x89PNG\r\n\x1a\n" + b"\x00" * 8):
+        df = spark.createDataFrame([("u", payload)], "url string, payload binary")
+        with pytest.raises(Exception, match="NotImplementedError|image decoding"):
+            image_features(df, fake=False).collect()
 
 
 def test_image_features_real_bmp_decode(spark):
@@ -441,59 +442,6 @@ def test_sample_frames_fanout(spark):
     ]
 
 
-def test_audio_features_stub_plumbing(spark):
-    rows = [("a1", b"wav-one"), ("a2", b"wav-two"), ("a3", None)]
-    df = spark.createDataFrame(rows, "url string, payload binary")
-    got = {r["url"]: r for r in audio_features(df, fake=True).collect()}
-    assert set(got) == {"a1", "a2", "a3"}
-    assert got["a1"]["loudness_fp"] != got["a2"]["loudness_fp"]
-    assert got["a1"]["sample_rate"] in (8000, 16000, 22050, 44100)
-    assert got["a1"]["duration_s"] > 0
-    assert got["a3"]["n_bytes"] == 0
-    again = {
-        r["url"]: r["loudness_fp"]
-        for r in audio_features(df, fake=True).collect()
-    }
-    assert again == {u: r["loudness_fp"] for u, r in got.items()}
-
-
-def test_audio_features_real_decode_raises(spark):
-    df = spark.createDataFrame([("a", b"x")], "url string, payload binary")
-    with pytest.raises(Exception, match="NotImplementedError|audio decoding"):
-        audio_features(df, fake=False).collect()
-
-
-def test_audio_features_real_wav_decode(spark):
-    """The real (fake=False) path parses actual PCM WAV bytes: sample rate
-    and duration from the header, loudness fingerprint from the samples."""
-    from py_image_dedup_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_pcm16,
-    )
-
-    rate = 16000
-    t = np.arange(rate * 2) / rate  # 2.0 s
-    quiet_then_loud = np.where(t < 1.0, 0.05, 0.9) * np.sin(
-        2 * np.pi * 440 * t
-    )
-    loud_then_quiet = quiet_then_loud[::-1].copy()
-    wav_a = encode_wav_pcm16(quiet_then_loud, rate)
-    wav_b = encode_wav_pcm16(loud_then_quiet, rate)
-    r, ch, mono = decode_wav(wav_a)
-    assert (r, ch, len(mono)) == (rate, 1, rate * 2)
-
-    df = spark.createDataFrame(
-        [("a", wav_a), ("a2", wav_a), ("b", wav_b)],
-        "url string, payload binary",
-    )
-    got = {r2["url"]: r2 for r2 in audio_features(df, fake=False).collect()}
-    assert got["a"]["sample_rate"] == rate
-    assert got["a"]["duration_s"] == 2.0
-    assert got["a"]["loudness_fp"] == got["a2"]["loudness_fp"]
-    # mirrored loudness envelope => different fingerprint
-    assert got["a"]["loudness_fp"] != got["b"]["loudness_fp"]
-
-
 def test_resize_images_binary_roundtrip(spark):
     rows = [("i1", b"img-one"), ("i2", b"img-two")]
     df = spark.createDataFrame(rows, "url string, payload binary")
@@ -513,46 +461,6 @@ def test_resize_images_binary_roundtrip(spark):
         for r in resize_images(df, 8, 8, fake=True).collect()
     }
     assert other["i1"] != again["i1"]
-
-
-def test_image_features_real_png_decode(spark):
-    """The real (fake=False) path also decodes PNG bytes; a BMP and a PNG
-    of the SAME pixels yield the SAME phash (gray conversion is
-    format-agnostic), so cross-format near-dup joins work."""
-    from py_image_dedup_spark.operators.multimodal import (
-        encode_bmp,
-        encode_png,
-        image_features,
-    )
-
-    rng = np.random.default_rng(13)
-    img = rng.integers(0, 256, size=(20, 15), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [("png", encode_png(img)), ("bmp", encode_bmp(img))],
-        "url string, payload binary",
-    )
-    got = {r["url"]: r for r in image_features(df, fake=False).collect()}
-    assert got["png"]["width"] == 15 and got["png"]["height"] == 20
-    assert got["png"]["phash"] == got["bmp"]["phash"]
-
-
-def test_resize_images_real_png_roundtrip(spark):
-    """PNG in -> PNG out at the target size, decodable by the same codec."""
-    from py_image_dedup_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-        resize_images,
-    )
-
-    grad = np.tile(np.arange(32, dtype=np.uint8) * 8, (16, 1))
-    df = spark.createDataFrame(
-        [("g", encode_png(grad))], "url string, payload binary"
-    )
-    out = resize_images(df, 8, 4, fake=False).collect()[0]
-    w, h, gray = decode_png(bytes(out["payload"]))
-    assert (w, h) == (8, 4)
-    assert np.all(np.diff(gray, axis=1) > 0)
-    assert np.all(gray == gray[0])
 
 
 # ---------------------------------------------------------- semantic dedup
@@ -673,13 +581,14 @@ def test_quality_filter_fails_null_text(spark):
     assert out[2][0] is False and "too_few_tokens" in out[2][1]
 
 
-def test_semantic_dedup_hot_cell_guard(spark):
+def test_semantic_dedup_hot_cell_guard(spark, monkeypatch):
     """VERDICT r3 wrong #1: a dense mega-cell (the SemDeDup pathology)
     must route through the pivot-star tier — O(s·P) edges, not O(s^2) —
     be reported via stats, and still fully dedup (a tight blob stays
     connected through any one pivot)."""
     import numpy as np
 
+    from py_image_dedup_spark.operators import similarity
     from py_image_dedup_spark.operators.similarity import semantic_dedup
 
     rng = np.random.default_rng(7)
@@ -693,10 +602,12 @@ def test_semantic_dedup_hot_cell_guard(spark):
     corpus = spark.createDataFrame(
         blob + other, "vec_id long, embedding array<float>"
     )
+    monkeypatch.setattr(similarity, "SALT_THRESHOLD", 50)
+    monkeypatch.setattr(similarity, "CELL_CAP", 200)
+    monkeypatch.setattr(similarity, "HOT_PIVOTS", 8)
     stats: dict = {}
     out = semantic_dedup(
-        corpus, threshold=0.99, nlist=2,
-        salt_threshold=50, cell_cap=200, hot_pivots=8, stats=stats,
+        corpus, threshold=0.99, nlist=2, stats=stats,
     ).collect()
     assert stats["hot_cells"] >= 1
     assert stats["hot_cell_rows"] >= 900
@@ -706,12 +617,13 @@ def test_semantic_dedup_hot_cell_guard(spark):
     assert sum(1 for r in blob_rows if r["action"] == "keep") == 1
 
 
-def test_semantic_dedup_salted_tier_equals_plain(spark):
+def test_semantic_dedup_salted_tier_equals_plain(spark, monkeypatch):
     """The warm (salted) tier is a plan change, not a semantics change:
     every within-cell pair is scored exactly once, so the output must be
     row-identical to the all-cool plan."""
     import numpy as np
 
+    from py_image_dedup_spark.operators import similarity
     from py_image_dedup_spark.operators.similarity import semantic_dedup
 
     rng = np.random.default_rng(11)
@@ -722,16 +634,19 @@ def test_semantic_dedup_salted_tier_equals_plain(spark):
         rows, "vec_id long, embedding array<float>"
     )
 
-    def run(**kw):
+    def run():
         return sorted(
             (r["vec_id"], r["cell"], r["action"], r["keep_id"])
             for r in semantic_dedup(
-                corpus, threshold=0.999, nlist=4, **kw
+                corpus, threshold=0.999, nlist=4
             ).collect()
         )
 
     plain = run()  # defaults: every cell cool
-    salted = run(salt_threshold=10, cell_cap=100_000, n_salts=5)
+    monkeypatch.setattr(similarity, "SALT_THRESHOLD", 10)
+    monkeypatch.setattr(similarity, "CELL_CAP", 100_000)
+    monkeypatch.setattr(similarity, "N_SALTS", 5)
+    salted = run()
     assert plain == salted
     assert any(a == "delete" for _, _, a, _ in plain)
 
